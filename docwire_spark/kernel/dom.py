@@ -1,4 +1,4 @@
-"""Lightweight HTML5 tokenizer + DOM tree builder + table fix-up.
+"""One-pass HTML tokenizer + tree builder + table fix-up.
 
 A from-scratch, pragmatic subset of the WHATWG HTML5 parsing algorithm,
 built to produce the same DOM *shapes that matter for text extraction*
@@ -14,79 +14,37 @@ as the reference's lexbor parse + ``fix_dom`` pass
 - foster parenting: non-table content inside table context is moved
   before the table at build time (spec behavior), while
   style/script/template stay inside the table and are relocated by
-  :func:`fix_dom` afterwards — this two-stage split reproduces the
+  the fix-up afterwards — this two-stage split reproduces the
   reference's event order (verified against its ``misplaced_tags``
   unit test expectations)
-- :func:`fix_dom` replicates the reference's post-parse WHATWG
-  table-insertion-mode fix-up exactly (everything that is not
+- the fix-up replicates the reference's post-parse WHATWG
+  table-insertion-mode pass exactly (everything that is not
   caption/thead/tbody/tfoot/tr/td/th is moved to just before the
   table element, post-order)
+
+The pass is built for few interpreter steps per token:
+
+- :func:`tokenize` runs one compiled regex per tag; a tag whose
+  attributes parse cleanly is matched whole, and its attribute text is
+  kept raw and only parsed (:func:`parse_attrs`) for the elements whose
+  attributes the event walk reads.  Tokens are plain ``str`` (text) and
+  ``(name, attrs)`` tuples, where ``attrs is None`` marks an end tag.
+- the builder is one loop over the tokens.  Elements are tuples
+  ``(name, attrs, kids)``; table / tbody / thead / tfoot / tr carry two
+  more slots, ``(..., pre, parent)``, where ``pre`` holds the nodes that
+  precede the element in its parent.  Foster parenting and the fix-up
+  append to ``pre`` instead of searching and shifting the parent's
+  child list, and one splice per parent at the end puts every node in
+  final document order — linear however many nodes a table sheds.
+- the open-element stack keeps per-name counts (unmatched end tags are
+  rejected in O(1)) and lazily pruned ``<p>`` / scope-boundary indices
+  (``<p>``-closing is O(1), not a walk down a deep stack).
 """
 
 from __future__ import annotations
 
 import html as _htmlmod
 import re
-
-ELEMENT = 0
-TEXT = 1
-DOCUMENT_NODE = 2
-
-
-class Node:
-    __slots__ = ("type", "name", "attrs", "children", "parent", "text")
-
-    def __init__(self, type_, name=None, attrs=None, text=None):
-        self.type = type_
-        self.name = name
-        self.attrs = attrs or {}
-        self.children = []
-        self.parent = None
-        self.text = text
-
-    def append(self, child):
-        child.parent = self
-        self.children.append(child)
-
-    def insert_before(self, child, ref):
-        child.parent = self
-        idx = self.children.index(ref)
-        self.children.insert(idx, child)
-
-    def remove_child(self, child):
-        self.children.remove(child)
-        child.parent = None
-
-    def text_content(self):
-        out = []
-        stack = [self]
-        while stack:
-            n = stack.pop()
-            if n.type == TEXT:
-                out.append(n.text)
-            else:
-                stack.extend(reversed(n.children))
-        return "".join(out)
-
-    def find(self, name):
-        for n in self.iter_elements():
-            if n.name == name:
-                return n
-        return None
-
-    def iter_elements(self):
-        stack = list(reversed(self.children))
-        while stack:
-            n = stack.pop()
-            if n.type == ELEMENT:
-                yield n
-                stack.extend(reversed(n.children))
-
-    def __repr__(self):  # debugging aid
-        if self.type == TEXT:
-            return f"#text{self.text!r}"
-        return f"<{self.name} {len(self.children)} children>"
-
 
 VOID_ELEMENTS = frozenset(
     "area base basefont bgsound br col embed frame hr img input keygen "
@@ -111,12 +69,53 @@ TABLE_SCOPE_STOPS = frozenset(("table", "td", "th", "caption", "html"))
 TABLE_ONLY_TAGS = frozenset(
     "caption col colgroup tbody tfoot thead tr td th".split()
 )
+#: elements that carry the (pre, parent) slots and get the table fix-up
+TABLE_MODE = frozenset(("table", "tr")) | TABLE_SECTIONS
+#: current-node names that put the builder in table context (foster
+#: parenting applies)
+_TABLE_CONTEXT = TABLE_MODE | {"colgroup"}
+_LI_STOPS = frozenset(
+    ("ul", "ol", "dl", "table", "td", "th", "caption", "html", "body", "div")
+)
+_A_STOPS = frozenset(("td", "th", "caption", "table", "html", "body", "div", "p"))
+#: start tags that need more than "append to the current node" in body
+#: (everything else takes the builder's fast path)
+_SPECIAL_START = (
+    frozenset(("html", "head", "body", "a")) | P_CLOSERS | TABLE_ONLY_TAGS
+)
+#: the builder's root, body and the ignored head: end tags never pop them
+_NEVER_POPPED = frozenset(("html", "body", "head"))
+_HTML_WS = " \t\n\r\f"
+
+# -- tokenizer ---------------------------------------------------------
 
 _TAG_NAME_RE = re.compile(r"[a-zA-Z][^\t\n\f />]*")
-_ATTR_RE = re.compile(
+_ATTR = (
     r"""[\t\n\f\r /]*([^\t\n\f\r /><=][^\t\n\f\r /><=]*)"""
     r"""(?:[\t\n\f\r ]*=[\t\n\f\r ]*("[^"]*"|'[^']*'|[^\t\n\f\r >]*))?"""
 )
+_ATTR_RE = re.compile(_ATTR)
+# the same attribute, matched atomically: exactly what a standalone
+# _ATTR_RE match at that position consumes, never backtracked into
+_ATTR_ATOMIC = (
+    r"""[\t\n\f\r /]*+[^\t\n\f\r /><=]++"""
+    r"""(?:[\t\n\f\r ]*+=[\t\n\f\r ]*+(?>"[^"]*+"|'[^']*+'|[^\t\n\f\r >]*+))?+"""
+)
+#: one search per markup construct; ``lastindex`` says which:
+#: 2 start tag with well-formed attributes (name, raw attribute text),
+#: 3 end tag, 4 comment, 5 any other start tag (attribute loop),
+#: None doctype / processing instruction / bogus comment (skipped)
+_MARKUP_RE = re.compile(
+    r"<(?:([a-zA-Z][^\t\n\f />]*+)((?:" + _ATTR_ATOMIC + r")*+)[\t\n\f\r /]*+>"
+    r"|/([a-zA-Z][^\t\n\f />]*+)[^>]*+>?"
+    r"|(!--)"
+    r"|[!?/][^>]*+>?"
+    r"|([a-zA-Z]))"
+)
+_RAW_CLOSE_RE = {
+    name: re.compile(r"</" + name + r"[\t\n\f\r />]", re.I)
+    for name in RAWTEXT_ELEMENTS | RCDATA_ELEMENTS
+}
 
 
 def _unescape(s: str) -> str:
@@ -125,492 +124,400 @@ def _unescape(s: str) -> str:
     return _htmlmod.unescape(s)
 
 
-#: token tuples (kind, payload): the tokenizer yields ~100 per page,
-#: so plain tuples with int kinds beat attribute-carrying objects
-#: (measured ~7% of kernel time in token alloc + string kind compares)
-TOK_TEXT, TOK_START, TOK_END = 0, 1, 2
+def parse_attrs(attrs) -> dict:
+    """Attribute dict of a start tag: ``attrs`` is the raw attribute
+    text :func:`tokenize` kept, or a dict it already parsed.  Names are
+    lower-cased, the first occurrence wins, values are entity-decoded."""
+    if attrs.__class__ is dict:
+        return attrs
+    out = {}
+    for aname, aval in _ATTR_RE.findall(attrs):
+        aname = aname.lower()
+        if aname in out:
+            continue
+        if aval[:1] in ('"', "'"):
+            aval = aval[1:-1]
+        out[aname] = _unescape(aval)
+    return out
 
 
-_RAWTEXT_CLOSE_RE: dict = {}
-
-
-def tokenize(s: str):
-    """Yield (kind, payload) token tuples; comments/doctypes/PIs\n    are skipped.  TOK_TEXT -> text str, TOK_START -> (name, attrs,\n    self_closing), TOK_END -> name."""
-    i = 0
+def _start_tag_loop(s: str, lt: int):
+    """Start tag at ``lt`` whose attributes do not parse cleanly
+    (stray ``<``/``=``, or no closing ``>`` before the end of input):
+    step through them one at a time.  Returns (name, attrs, end)."""
     n = len(s)
-    text_start = 0
-    while i < n:
-        lt = s.find("<", i)
-        if lt == -1:
+    m = _TAG_NAME_RE.match(s, lt + 1)
+    name = m.group(0).lower()
+    j = m.end()
+    attrs = {}
+    while j < n:
+        c = s[j]
+        if c == ">":
+            j += 1
             break
-        nxt = s[lt + 1 : lt + 2]
-        if not (nxt.isalpha() or nxt in ("/", "!", "?")):
-            i = lt + 1
-            continue
-        if lt > text_start:
-            yield (TOK_TEXT, _unescape(s[text_start:lt]))
-        if nxt == "!":
-            if s.startswith("<!--", lt):
-                end = s.find("-->", lt + 4)
-                i = text_start = (end + 3) if end != -1 else n
-            else:
-                end = s.find(">", lt + 2)
-                i = text_start = (end + 1) if end != -1 else n
-            continue
-        if nxt == "?":
-            end = s.find(">", lt + 2)
-            i = text_start = (end + 1) if end != -1 else n
-            continue
-        if nxt == "/":
-            m = _TAG_NAME_RE.match(s, lt + 2)
-            if not m:
-                # bogus comment
-                end = s.find(">", lt + 2)
-                i = text_start = (end + 1) if end != -1 else n
+        if c == "/" and s[j + 1 : j + 2] == ">":
+            j += 2
+            break
+        am = _ATTR_RE.match(s, j)
+        if am and am.group(1):
+            aname = am.group(1).lower()
+            aval = am.group(2)
+            if aval is None:
+                aval = ""
+            elif aval[:1] in ('"', "'"):
+                aval = aval[1:-1]
+            if aname not in attrs:
+                attrs[aname] = _unescape(aval)
+            j = am.end()
+        else:
+            j += 1
+    else:
+        j = n
+    return name, attrs, j
+
+
+def tokenize(s: str) -> list:
+    """Token list of ``s``: a ``str`` is text (entity-decoded outside
+    raw-text elements), ``(name, attrs)`` a start tag and ``(name,
+    None)`` an end tag.  ``attrs`` is the raw attribute text (see
+    :func:`parse_attrs`) or an already parsed dict.  Comments, doctypes
+    and PIs are dropped; a self-closing slash is ignored.
+
+    One ``finditer`` runs until a construct that moves the scan
+    position itself (comment, raw-text element, start tag for the
+    attribute loop); it restarts after that construct."""
+    out = []
+    push = out.append
+    finditer = _MARKUP_RE.finditer
+    unescape = _htmlmod.unescape
+    pos = 0
+    n = len(s)
+    while True:
+        for m in finditer(s, pos):
+            lt = m.start()
+            if lt > pos:
+                t = s[pos:lt]
+                push(unescape(t) if "&" in t else t)
+            kind = m.lastindex
+            pos = m.end()
+            if kind == 2:
+                name, attrs = m.group(1, 2)
+                name = name.lower()
+                if name not in _RAW_CLOSE_RE:
+                    push((name, attrs))
+                    continue
+            elif kind == 3:
+                push((m.group(3).lower(), None))
                 continue
-            name = m.group(0).lower()
-            end = s.find(">", m.end())
-            i = text_start = (end + 1) if end != -1 else n
-            yield (TOK_END, name)
+            elif kind is None:
+                continue
+            break
+        else:
+            break
+        if kind == 4:
+            end = s.find("-->", lt + 4)
+            pos = (end + 3) if end != -1 else n
             continue
-        # start tag
-        m = _TAG_NAME_RE.match(s, lt + 1)
-        name = m.group(0).lower()
-        j = m.end()
-        attrs = {}
-        self_closing = False
-        while j < n:
-            c = s[j]
-            if c == ">":
-                j += 1
-                break
-            if c == "/" and s[j + 1 : j + 2] == ">":
-                self_closing = True
-                j += 2
-                break
-            am = _ATTR_RE.match(s, j)
-            if am and am.group(1):
-                aname = am.group(1).lower()
-                aval = am.group(2)
-                if aval is None:
-                    aval = ""
-                elif aval[:1] in ('"', "'"):
-                    aval = aval[1:-1]
-                if aname not in attrs:
-                    attrs[aname] = _unescape(aval)
-                j = am.end()
-            else:
-                j += 1
-        else:
-            j = n
-        i = text_start = j
-        yield (TOK_START, (name, attrs, self_closing))
-        if name in RAWTEXT_ELEMENTS or name in RCDATA_ELEMENTS:
-            close = _RAWTEXT_CLOSE_RE.get(name)
-            if close is None:
-                close = _RAWTEXT_CLOSE_RE[name] = re.compile(
-                    r"</" + re.escape(name) + r"[\t\n\f\r />]", re.I
-                )
-            cm = close.search(s, i)
+        if kind == 5:
+            name, attrs, pos = _start_tag_loop(s, lt)
+        push((name, attrs))
+        close = _RAW_CLOSE_RE.get(name)
+        if close is not None:
+            cm = close.search(s, pos)
             if cm:
-                raw = s[i : cm.start()]
+                raw = s[pos : cm.start()]
                 gt = s.find(">", cm.start() + 1)
-                i = text_start = (gt + 1) if gt != -1 else n
+                pos = (gt + 1) if gt != -1 else n
             else:
-                raw = s[i:]
-                i = text_start = n
+                raw = s[pos:]
+                pos = n
             if raw:
-                if name in RCDATA_ELEMENTS:
-                    raw = _unescape(raw)
-                yield (TOK_TEXT, raw)
-            yield (TOK_END, name)
-    if text_start < n:
-        yield (TOK_TEXT, _unescape(s[text_start:]))
+                push(_unescape(raw) if name in RCDATA_ELEMENTS else raw)
+            push((name, None))
+    if pos < n:
+        push(_unescape(s[pos:]))
+    return out
 
 
-
-class _OpenStack:
-    """Open-elements stack with per-name open counts, so unmatched
-    end tags short-circuit in O(1) instead of scanning the stack
-    (adversarial </x> floods on deep pages were O(n^2))."""
-
-    __slots__ = ("items", "counts")
-
-    def __init__(self, root):
-        self.items = [root]
-        self.counts = {root.name: 1}
-
-    def append(self, node):
-        c = self.counts
-        c[node.name] = c.get(node.name, 0) + 1
-        self.items.append(node)
-
-    def truncate(self, idx):
-        c = self.counts
-        for node in self.items[idx:]:
-            c[node.name] -= 1
-        del self.items[idx:]
-
-    def count(self, name):
-        return self.counts.get(name, 0)
-
-    def __len__(self):
-        return len(self.items)
-
-    def __getitem__(self, i):
-        return self.items[i]
-
-    def __iter__(self):
-        return iter(self.items)
-
-    def __reversed__(self):
-        return reversed(self.items)
+# -- tree builder ------------------------------------------------------
 
 
-class TreeBuilder:
-    def __init__(self):
-        self.root = Node(DOCUMENT_NODE, "#document")
-        self.html = Node(ELEMENT, "html")
-        self.head = Node(ELEMENT, "head")
-        self.body = Node(ELEMENT, "body")
-        self.root.append(self.html)
-        self.html.append(self.head)
-        self.html.append(self.body)
-        self.stack = _OpenStack(self.html)
-        self._p_indices = []       # open <p> stack indices (lazy-pruned)
-        self._pscope_indices = []  # table/td/th/caption scope boundaries
-        self.table_nodes = []      # document-order table-mode elements
-        self.in_body_phase = False
-        self.saw_html = False
-        self.saw_head = False
-        self.saw_body = False
+def _new_node(name, attrs, parent):
+    if name in TABLE_MODE:
+        return (name, attrs, [], [], parent)
+    return (name, attrs, () if name in VOID_ELEMENTS else [])
 
-    # -- helpers -------------------------------------------------------
-    def _top(self):
-        return self.stack.items[-1]
 
-    def _append_text(self, target, text):
-        if target.children and target.children[-1].type == TEXT:
-            target.children[-1].text += text
-        else:
-            target.append(Node(TEXT, text=text))
+def _truncate(stack, counts, idx):
+    for node in stack[idx:]:
+        counts[node[0]] -= 1
+    del stack[idx:]
 
-    def _table_context(self):
-        """Return the insertion-point element when it is directly in
-        table structure (current node is table/tbody/thead/tfoot/tr/
-        colgroup), else None — this is the WHATWG condition for foster
-        parenting."""
-        top = self.stack.items[-1]
-        if top.name in ("table", "tr", "colgroup") or top.name in TABLE_SECTIONS:
-            return top
-        return None
 
-    def _nearest_table(self):
-        for node in reversed(self.stack.items):
-            if node.name == "table":
-                return node
-        return None
+def _pop_to(stack, counts, names, inclusive=False, stops=TABLE_SCOPE_STOPS):
+    """Pop until the current node is the nearest of ``names`` (then
+    optionally pop it too), unless a ``stops`` element is nearer.
+    Returns True when found."""
+    for idx in range(len(stack) - 1, 0, -1):
+        nm = stack[idx][0]
+        if nm in names:
+            _truncate(stack, counts, idx if inclusive else idx + 1)
+            return True
+        if nm in stops:
+            return False
+    return False
 
-    def _foster_parent(self, node):
-        table = self._nearest_table()
-        if table is not None and table.parent is not None:
-            table.parent.insert_before(node, table)
-        else:
-            self.body.append(node)
 
-    def _pop_to(self, names, inclusive=False, stops=TABLE_SCOPE_STOPS):
-        """Pop stack until top is one of ``names`` (then optionally pop
-        it too). Returns True when found."""
-        items = self.stack.items
-        for idx in range(len(items) - 1, 0, -1):
-            nm = items[idx].name
-            if nm in names:
-                self.stack.truncate(idx + 1)
-                if inclusive:
-                    self.stack.truncate(idx)
-                return True
-            if nm in stops and nm not in names:
-                return False
-        return False
+class _Builder:
+    """Open-element stack and document nodes of one parse."""
 
-    def _close_p(self):
-        # equivalent to scanning the open stack top-down for a "p"
-        # stopping at table/cell boundaries, but O(1) via tracked
-        # indices — the naive walk is O(depth) per block tag and turns
-        # deeply nested crawl pages into O(n^2) parses
-        stack_len = len(self.stack)
-        p_idx = self._p_indices
-        while p_idx and p_idx[-1] >= stack_len:
+    __slots__ = (
+        "stack", "counts", "p_idx", "b_idx", "table_nodes", "body",
+    )
+
+    def __init__(self, html, body):
+        self.stack = [html]
+        self.counts = {"html": 1}
+        self.p_idx = []   # open <p> stack indices (lazily pruned)
+        self.b_idx = []   # table/td/th/caption scope boundaries
+        self.table_nodes = []  # table-mode elements, creation order
+        self.body = body
+
+    def insert(self, name, attrs):
+        stack = self.stack
+        top = stack[-1]
+        node = _new_node(name, attrs, top)
+        top[2].append(node)
+        if name in TABLE_MODE:
+            self.table_nodes.append(node)
+        if name not in VOID_ELEMENTS:
+            if name == "p":
+                self.p_idx.append(len(stack))
+            elif name in ("table", "td", "th", "caption"):
+                self.b_idx.append(len(stack))
+            counts = self.counts
+            counts[name] = counts.get(name, 0) + 1
+            stack.append(node)
+
+    def enter_body(self):
+        """Switch to the body phase: body goes on the stack unless an
+        element from the head phase is still open.  Returns True."""
+        if len(self.stack) == 1:
+            self.counts["body"] = 1
+            self.stack.append(self.body)
+        return True
+
+    def foster(self, node):
+        """Put ``node`` just before the nearest open table."""
+        for item in reversed(self.stack):
+            if item[0] == "table":
+                item[3].append(node)
+                return
+        self.body[2].append(node)
+
+    def close_p(self):
+        n = len(self.stack)
+        p_idx = self.p_idx
+        while p_idx and p_idx[-1] >= n:
             p_idx.pop()
         if not p_idx:
             return
-        b_idx = self._pscope_indices
-        while b_idx and b_idx[-1] >= stack_len:
+        b_idx = self.b_idx
+        while b_idx and b_idx[-1] >= n:
             b_idx.pop()
-        last_b = b_idx[-1] if b_idx else 0
-        if p_idx[-1] > last_b:
-            self.stack.truncate(p_idx.pop())
+        if p_idx[-1] > (b_idx[-1] if b_idx else 0):
+            _truncate(self.stack, self.counts, p_idx.pop())
 
-    def _close_li_dd_dt(self, name):
-        group = ("li",) if name == "li" else ("dd", "dt")
-        items = self.stack.items
-        for idx in range(len(items) - 1, 0, -1):
-            nm = items[idx].name
-            if nm in group:
-                self.stack.truncate(idx)
-                return
-            if nm in ("ul", "ol", "dl", "table", "td", "th", "caption", "html", "body", "div"):
-                return
-
-    def _insert(self, name, attrs, push=True, parent=None):
-        node = Node(ELEMENT, name, attrs)
-        (parent if parent is not None else self._top()).append(node)
-        if name == "table" or name == "tr" or name in TABLE_SECTIONS:
-            self.table_nodes.append(node)
-        if push and name not in VOID_ELEMENTS:
-            if name == "p":
-                self._p_indices.append(len(self.stack))
-            elif name in ("table", "td", "th", "caption"):
-                self._pscope_indices.append(len(self.stack))
-            self.stack.append(node)
-        return node
-
-    def _ensure_body_phase(self):
-        if not self.in_body_phase:
-            self.in_body_phase = True
-            if len(self.stack) == 1:
-                self.stack.append(self.body)
-
-    # -- token handlers ------------------------------------------------
-    def start_tag(self, name, attrs):
-        if name == "html":
-            if not self.saw_html:
-                self.saw_html = True
-                self.html.attrs.update(attrs)
-            return
-        if name == "head":
-            self.saw_head = True
-            return
-        if name == "body":
-            self.saw_body = True
-            self.body.attrs.update(attrs)
-            self._ensure_body_phase()
-            return
-        if not self.in_body_phase and name in HEAD_CONTENT:
-            node = Node(ELEMENT, name, attrs)
-            self.head.append(node)
+    def table_start(self, name, attrs):
+        """Start tag while the current node is table structure."""
+        stack, counts = self.stack, self.counts
+        if name in ("caption", "colgroup") or name in TABLE_SECTIONS:
+            _pop_to(stack, counts, ("table",))
+        elif name == "col":
+            if stack[-1][0] != "colgroup":
+                _pop_to(stack, counts, ("table",))
+                self.insert("colgroup", "")
+        elif name == "tr":
+            if not _pop_to(stack, counts, TABLE_SECTIONS):
+                _pop_to(stack, counts, ("table",))
+                self.insert("tbody", "")
+        elif name in ("td", "th"):
+            if not _pop_to(stack, counts, ("tr",)):
+                if not _pop_to(stack, counts, TABLE_SECTIONS):
+                    _pop_to(stack, counts, ("table",))
+                    self.insert("tbody", "")
+                self.insert("tr", "")
+        elif name == "table":
+            # spec: implies </table>, new table as sibling
+            _pop_to(stack, counts, ("table",), True, ("html",))
+        elif name == "form":
+            return  # in-table form: inserted and popped; no text effect
+        elif name not in ("style", "script", "template"):
+            # anything else: foster parent, keep on the open stack
+            node = _new_node(name, attrs, None)
+            self.foster(node)
             if name not in VOID_ELEMENTS:
-                self.stack.append(node)
+                counts[name] = counts.get(name, 0) + 1
+                stack.append(node)
             return
-        self._ensure_body_phase()
+        self.insert(name, attrs)
 
-        tctx = self._table_context()
-        if tctx is not None:
-            if name == "caption":
-                self._pop_to(("table",))
-                self._insert(name, attrs)
-                return
-            if name == "colgroup":
-                self._pop_to(("table",))
-                self._insert(name, attrs)
-                return
-            if name == "col":
-                if self._top().name != "colgroup":
-                    self._pop_to(("table",))
-                    self._insert("colgroup", {})
-                self._insert(name, attrs)
-                return
-            if name in TABLE_SECTIONS:
-                self._pop_to(("table",))
-                self._insert(name, attrs)
-                return
-            if name == "tr":
-                if not self._pop_to(TABLE_SECTIONS):
-                    self._pop_to(("table",))
-                    self._insert("tbody", {})
-                self._insert(name, attrs)
-                return
-            if name in ("td", "th"):
-                if not self._pop_to(("tr",)):
-                    if not self._pop_to(TABLE_SECTIONS):
-                        self._pop_to(("table",))
-                        self._insert("tbody", {})
-                    self._insert("tr", {})
-                self._insert(name, attrs)
-                return
-            if name in ("style", "script", "template"):
-                self._insert(name, attrs)
-                return
-            if name == "table":
-                # spec: implies </table>, new table as sibling
-                self._pop_to(("table",), inclusive=True, stops=("html",))
-                self._insert(name, attrs)
-                return
-            if name == "form":
-                return  # in-table form: insert+pop immediately; no effect on text
-            # anything else: foster parent, keep on open stack
-            node = Node(ELEMENT, name, attrs)
-            if name == "p" or name in P_CLOSERS:
-                pass  # p-closing irrelevant across foster boundary
-            self._foster_parent(node)
-            if name not in VOID_ELEMENTS:
-                self.stack.append(node)
-            return
 
-        # normal in-body insertion
-        if name in TABLE_ONLY_TAGS:
-            return  # spec: ignore stray table tags in body
-        if name in P_CLOSERS:
-            self._close_p()
-        if name == "li" or name in ("dd", "dt"):
-            self._close_li_dd_dt(name)
-        if name in ("a",):
-            # crude adoption-agency: close an open <a> first (spec)
-            items = self.stack.items
-            for idx in range(len(items) - 1, 0, -1):
-                nm = items[idx].name
-                if nm == "a":
-                    self.stack.truncate(idx)
-                    break
-                if nm in ("td", "th", "caption", "table", "html", "body", "div", "p"):
-                    break
-        if name == "table":
-            self._insert(name, attrs)
-            return
-        self._insert(name, attrs)
-
-    def end_tag(self, name):
-        if name == "br":
-            self._ensure_body_phase()
-            self._insert("br", {}, push=False)
-            return
-        if name in ("html", "body", "head"):
-            return
-        if name == "table":
-            self._pop_to(("table",), inclusive=True, stops=("html",))
-            return
-        if name in ("td", "th", "tr", "caption") or name in TABLE_SECTIONS:
-            self._pop_to((name,), inclusive=True)
-            return
-        # generic: find matching element without crossing table/cell bounds
-        if self.stack.count(name) == 0:
-            return  # O(1) rejection of unmatched end tags
-        items = self.stack.items
-        for idx in range(len(items) - 1, 0, -1):
-            node = items[idx]
-            if node.name == name:
-                self.stack.truncate(idx)
-                return
-            if node.name in TABLE_SCOPE_STOPS:
-                return
-
-    def text(self, text):
-        if not self.in_body_phase:
-            top = self._top()
-            if top is not self.html:
-                # inside an explicit head element (title/style/script/...)
-                self._append_text(top, text)
-                return
-            if text.strip(" \t\n\r\f") == "":
-                return
-            self._ensure_body_phase()
-        tctx = self._table_context()
-        if tctx is not None and text.strip(" \t\n\r\f") != "":
-            node = Node(TEXT, text=text)
-            self._foster_parent(node)
-            return
-        self._append_text(self._top(), text)
-
-    def feed(self, tokens):
-        text = self.text
-        start_tag = self.start_tag
-        end_tag = self.end_tag
-        for kind, payload in tokens:
-            if kind == TOK_TEXT:
-                text(payload)
-            elif kind == TOK_START:
-                start_tag(payload[0], payload[1])
+def _build(tokens):
+    """Run the tree construction over ``tokens``; returns (html
+    element, table-mode elements in creation order)."""
+    head = ("head", "", [])
+    body = ("body", "", [])
+    html = ("html", "", [head, body])
+    b = _Builder(html, body)
+    stack, counts, p_idx = b.stack, b.counts, b.p_idx
+    in_body = False
+    for tok in tokens:
+        if tok.__class__ is str:
+            top = stack[-1]
+            if not in_body:
+                if top is not html:
+                    # inside an explicit head element (title/style/...)
+                    top[2].append(tok)
+                    continue
+                if not tok.strip(_HTML_WS):
+                    continue
+                in_body = b.enter_body()
+                top = body
+            if top[0] in _TABLE_CONTEXT and tok.strip(_HTML_WS):
+                b.foster(tok)
             else:
-                end_tag(payload)
-        return self.root
-
-
-# ---------------------------------------------------------------------------
-# fix_dom: reference src/html_parser.cpp:208-328 replicated exactly
-# ---------------------------------------------------------------------------
-
-_TABLE_OK = frozenset(("caption", "tbody", "tfoot", "thead", "td", "th", "tr"))
-_TBODY_OK = frozenset(("tr", "th", "td"))
-_TR_OK = frozenset(("th", "td"))
-
-
-def _fix_in_table_mode(node, child):
-    name = child.name
-    if name in ("caption", "tbody", "tfoot", "thead", "td", "th", "tr"):
-        return False
-    # style/script/template and anything else: move before the table
-    node.remove_child(child)
-    node.parent.insert_before(child, node)
-    return True
-
-
-def _fix_in_table_body_mode(node, child):
-    if child.name in _TBODY_OK:
-        return False
-    return _fix_in_table_mode(node, child)
-
-
-def _fix_in_table_row_mode(node, child):
-    if child.name in _TR_OK:
-        return False
-    return _fix_in_table_mode(node, child)
-
-
-def _fix_one(node):
-    if node.type != ELEMENT:
-        return
-    name = node.name
-    if name == "table":
-        fixer = _fix_in_table_mode
-    elif name in TABLE_SECTIONS:
-        fixer = _fix_in_table_body_mode
-    elif name == "tr":
-        fixer = _fix_in_table_row_mode
-    else:
-        return
-    for child in list(node.children):
-        if child.type == ELEMENT:
-            fixer(node, child)
-
-
-def fix_dom(node, table_nodes=None):
-    """Post-order WHATWG table-mode fix-up (reference fix_dom);
-    iterative — crawl pages nest deeper than Python's recursion
-    limit.
-
-    Only table-mode elements (table / thead / tbody / tfoot / tr) can
-    be fixed, so when the builder hands over its document-order list
-    of exactly those nodes, the full-tree walk is skipped and the
-    list is processed in reverse (children precede parents in reverse
-    document order — the same order the post-order walk fixes them)."""
-    if table_nodes is not None:
-        for cur in reversed(table_nodes):
-            _fix_one(cur)
-        return
-    stack = [(node, False)]
-    while stack:
-        cur, processed = stack.pop()
-        if processed:
-            _fix_one(cur)
+                top[2].append(tok)
             continue
-        stack.append((cur, True))
-        for child in reversed(cur.children):
-            stack.append((child, False))
+        name, attrs = tok
+        if attrs is None:
+            if stack[-1][0] == name and name not in _NEVER_POPPED:
+                stack.pop()  # what every end-tag rule does to a match on top
+                counts[name] -= 1
+            elif name == "br":
+                in_body = in_body or b.enter_body()
+                stack[-1][2].append(("br", "", ()))
+            elif counts.get(name) and name not in _NEVER_POPPED:
+                # the nearest open element of that name, not crossing
+                # table/cell bounds (nothing open: nothing to do)
+                if name == "table":
+                    _pop_to(stack, counts, ("table",), True, ("html",))
+                else:
+                    _pop_to(stack, counts, (name,), True)
+            continue
+        if in_body and name not in _SPECIAL_START:
+            top = stack[-1]
+            if top[0] in _TABLE_CONTEXT:
+                b.table_start(name, attrs)
+            elif name in VOID_ELEMENTS:
+                top[2].append((name, attrs, ()))
+            else:
+                node = (name, attrs, [])
+                top[2].append(node)
+                counts[name] = counts.get(name, 0) + 1
+                stack.append(node)
+            continue
+        if name == "html" or name == "head":
+            continue
+        if not in_body:
+            if name in HEAD_CONTENT:
+                node = _new_node(name, attrs, None)
+                head[2].append(node)
+                if name not in VOID_ELEMENTS:
+                    counts[name] = counts.get(name, 0) + 1
+                    stack.append(node)
+                continue
+            in_body = b.enter_body()
+        if name == "body":
+            continue
+        if stack[-1][0] in _TABLE_CONTEXT:
+            b.table_start(name, attrs)
+            continue
+        if name in TABLE_ONLY_TAGS:
+            continue  # spec: ignore stray table tags in body
+        if name in P_CLOSERS:
+            if p_idx:
+                b.close_p()
+            if name == "li":
+                _pop_to(stack, counts, ("li",), True, _LI_STOPS)
+            elif name == "dd" or name == "dt":
+                _pop_to(stack, counts, ("dd", "dt"), True, _LI_STOPS)
+            elif name == "table":
+                b.insert(name, attrs)
+                continue
+        elif name == "a":
+            # crude adoption agency: close an open <a> first (spec)
+            _pop_to(stack, counts, ("a",), True, _A_STOPS)
+        top = stack[-1]
+        if name in VOID_ELEMENTS:
+            top[2].append((name, attrs, ()))
+            continue
+        node = (name, attrs, [])
+        top[2].append(node)
+        if name == "p":
+            p_idx.append(len(stack))
+        counts[name] = counts.get(name, 0) + 1
+        stack.append(node)
+    return html, b.table_nodes
 
 
-def parse_html(text: str) -> Node:
-    """Parse HTML text into a DOM, then apply the table fix-up."""
-    builder = TreeBuilder()
-    root = builder.feed(tokenize(text))
-    fix_dom(root, builder.table_nodes)
-    return root
+# ---------------------------------------------------------------------------
+# table fix-up: reference src/html_parser.cpp:208-328 replicated exactly
+# ---------------------------------------------------------------------------
+
+#: children a table-mode element keeps (the reference's body and row
+#: modes fall back to the table mode, so all three keep the same set);
+#: any other element child is moved to just before it
+_TABLE_KIDS = frozenset(("caption", "tbody", "tfoot", "thead", "td", "th", "tr"))
+
+
+def fix_tables(table_nodes) -> None:
+    """Post-order WHATWG table-mode fix-up, then splice every ``pre``
+    list into its parent's children.
+
+    Only table-mode elements can be fixed, and reverse creation order
+    visits children before parents — the order of the reference's
+    post-order walk.  An element's children are, in order, each child's
+    ``pre`` nodes followed by the child itself; the ones it may not
+    hold go to its own ``pre``, in order, after what foster parenting
+    already put there."""
+    for node in reversed(table_nodes):
+        moved = node[3]
+        kept = []
+        for kid in node[2]:
+            if kid.__class__ is str:
+                kept.append(kid)
+                continue
+            if len(kid) == 5 and kid[3]:
+                for x in kid[3]:
+                    if x.__class__ is str or x[0] in _TABLE_KIDS:
+                        kept.append(x)
+                    else:
+                        moved.append(x)
+                kid[3].clear()
+            if kid[0] in _TABLE_KIDS:
+                kept.append(kid)
+            else:
+                moved.append(kid)
+        node[2][:] = kept
+    parents = {}
+    for node in table_nodes:
+        if node[3]:
+            parents[id(node[4])] = node[4]
+    for parent in parents.values():
+        kids = []
+        for kid in parent[2]:
+            if kid.__class__ is not str and len(kid) == 5 and kid[3]:
+                kids += kid[3]
+            kids.append(kid)
+        parent[2][:] = kids
+
+
+def parse_html(text: str):
+    """Parse HTML text into a DOM and apply the table fix-up.  Returns
+    the ``html`` element; its first two children are always ``head``
+    and ``body``."""
+    html, table_nodes = _build(tokenize(text))
+    if table_nodes:
+        fix_tables(table_nodes)
+    return html

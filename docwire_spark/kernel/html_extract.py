@@ -13,6 +13,15 @@ Replicates the reference's DOM walk and whitespace state machine
 - head text suppressed except <style>; <title>/<script>/<iframe>
   content suppressed; CSS ``list-style: none`` on ol/ul/li disables
   list enumeration (the LibreOffice export quirk)
+
+The walk is one linear pass over the tree :func:`dom.parse_html`
+returns, with one list iterator per open element.  Tags dispatch
+through the ``_OPEN`` / ``_CLOSE`` tables (an event kind, or a marker
+for the few tags with state).  Text is gathered raw between two tags
+and collapsed once per run — the same bytes as collapsing each text
+node, since a run's nodes share one state and whitespace collapsing
+composes across node boundaries.  Attributes are parsed only for the
+elements whose events carry them.
 """
 
 from __future__ import annotations
@@ -21,10 +30,13 @@ import re
 
 from docwire_spark.kernel import events as E
 from docwire_spark.kernel.dates import parse_iso8601_or_legacy
-from docwire_spark.kernel.dom import ELEMENT, TEXT, Node, parse_html
+from docwire_spark.kernel.dom import parse_attrs, parse_html
 
-_ASCII_WS_RUN = re.compile(r"[ \t\n\r\f\v]+")
+#: the ASCII whitespace runs that are not already a single space
+_ASCII_WS_RUN = re.compile(r" [ \t\n\r\f\v]+|[\t\n\r\f\v][ \t\n\r\f\v]*")
 _ASCII_WS = " \t\n\r\f\v"
+#: a previous character after which a text run is left-trimmed
+_WS_OR_START = _ASCII_WS + "\0"
 
 BLOCK_LEVEL = frozenset(
     "address article aside blockquote details dialog dd div dl dt "
@@ -33,6 +45,31 @@ BLOCK_LEVEL = frozenset(
 )
 TABLE_ELEMENTS = frozenset("td tr th caption thead tbody tfoot".split())
 PARAGRAPH_ELEMENTS = frozenset(("h1", "h2", "h3", "h4", "h5", "h6", "p"))
+#: tags that right-trim the pending text run and reset the context
+_TRIM_BEFORE = BLOCK_LEVEL | TABLE_ELEMENTS
+
+#: start tag -> event kind (payload: styling), or True for the tags
+#: handled one by one in ``_walk``
+_OPEN = {
+    **dict.fromkeys(PARAGRAPH_ELEMENTS, E.PARAGRAPH),
+    "div": E.SECTION, "span": E.SPAN, "table": E.TABLE,
+    "caption": E.CAPTION, "tr": E.TABLE_ROW, "td": E.TABLE_CELL,
+    "th": E.TABLE_CELL, "li": E.LIST_ITEM, "b": E.BOLD, "u": E.UNDERLINE,
+    **dict.fromkeys(
+        ("a", "img", "ul", "ol", "br", "meta", "style", "title", "script",
+         "iframe"), True,
+    ),
+}
+#: end tag -> event kind (no payload), or True for the flag tags
+_CLOSE = {
+    **dict.fromkeys(PARAGRAPH_ELEMENTS, E.CLOSE_PARAGRAPH),
+    "div": E.CLOSE_SECTION, "span": E.CLOSE_SPAN, "a": E.CLOSE_LINK,
+    "table": E.CLOSE_TABLE, "caption": E.CLOSE_CAPTION,
+    "tr": E.CLOSE_TABLE_ROW, "td": E.CLOSE_TABLE_CELL,
+    "th": E.CLOSE_TABLE_CELL, "ul": E.CLOSE_LIST, "ol": E.CLOSE_LIST,
+    "li": E.CLOSE_LIST_ITEM, "b": E.CLOSE_BOLD, "u": E.CLOSE_UNDERLINE,
+    **dict.fromkeys(("style", "title", "script", "iframe"), True),
+}
 
 
 def parse_css_list_style(style_text: str):
@@ -79,28 +116,6 @@ def parse_css_list_style(style_text: str):
     return turn_off_ul, turn_off_ol
 
 
-class _Ctx:
-    __slots__ = (
-        "events", "turn_off_ul", "turn_off_ol", "in_head", "in_title",
-        "in_script", "in_style", "style_text", "buffered_text",
-        "last_char", "in_metadata", "meta",
-    )
-
-    def __init__(self):
-        self.events = []
-        self.turn_off_ul = False
-        self.turn_off_ol = False
-        self.in_head = False
-        self.in_title = False
-        self.in_script = False
-        self.in_style = False
-        self.style_text = []
-        self.buffered_text = ""
-        self.last_char = "\0"
-        self.in_metadata = False
-        self.meta = {}
-
-
 def decode_data_url(src):
     """Decode a base64 ``data:`` URL into (mime, bytes), or None.
 
@@ -131,16 +146,16 @@ def decode_data_url(src):
     return (mime or "application/octet-stream", data)
 
 
-def _emit(ctx, kind, payload=None):
-    ctx.events.append((kind, payload))
 
 
-def _styling(node):
+def _styling(attrs):
     """Capture (classes, id, style) from the element's attributes
     (reference html_parser.cpp:50-71: class split on single spaces,
     style whitespace-trimmed).  None when all empty — the common case,
     keeping event tuples cheap inside Arrow batches."""
-    attrs = node.attrs
+    if not attrs:
+        return None
+    attrs = parse_attrs(attrs)
     class_str = attrs.get("class")
     classes = class_str.split(" ") if class_str else []
     id_ = attrs.get("id") or ""
@@ -150,176 +165,180 @@ def _styling(node):
     return (classes, id_, style)
 
 
-def _process_text(ctx, text):
-    if ctx.in_head and not ctx.in_style:
-        return
-    if ctx.in_style:
-        ctx.style_text.append(text)
-        return
-    text = _ASCII_WS_RUN.sub(" ", text)
-    last_was_space = ctx.last_char in _ASCII_WS
-    if last_was_space or ctx.last_char == "\0":
-        text = text.lstrip(_ASCII_WS)
-    if text:
-        ctx.last_char = text[-1]
-        ctx.buffered_text += text
-
-
-def _flush_buffer(ctx, tag_name):
-    if not ctx.buffered_text:
-        return
-    if tag_name in BLOCK_LEVEL or tag_name in TABLE_ELEMENTS:
-        ctx.buffered_text = ctx.buffered_text.rstrip(_ASCII_WS)
-        ctx.last_char = "\0"
-    if ctx.buffered_text:
-        _emit(ctx, E.TEXT, ctx.buffered_text)
-        ctx.buffered_text = ""
-
-
-def _handle_meta(ctx, attrs):
+def _handle_meta(meta, attrs):
     name = attrs.get("name")
     content = attrs.get("content")
     if not name or content is None:
         return
     lname = name.lower()
     if lname in ("author", "dcterms.creator"):
-        ctx.meta["author"] = content
+        meta["author"] = content
     elif lname in ("changedby", "dcterms.contributor"):
-        ctx.meta.setdefault("last_modified_by", content)
+        meta.setdefault("last_modified_by", content)
     elif lname in ("created", "dcterms.issued"):
         dt = parse_iso8601_or_legacy(content)
         if dt is not None:
-            ctx.meta["creation_date"] = dt
+            meta["creation_date"] = dt
     elif lname in ("changed", "dcterms.modified"):
-        if "last_modification_date" not in ctx.meta:
+        if "last_modification_date" not in meta:
             dt = parse_iso8601_or_legacy(content)
             if dt is not None:
-                ctx.meta["last_modification_date"] = dt
+                meta["last_modification_date"] = dt
 
 
-def _process_tag(ctx, node, closing):
-    name = node.name
-    _flush_buffer(ctx, name)
-    if closing:
-        if name == "style":
-            ctx.in_style = False
-            if not ctx.in_metadata:
-                _emit(ctx, E.STYLE, "".join(ctx.style_text))
-            ctx.style_text = []
-        elif name in PARAGRAPH_ELEMENTS:
-            _emit(ctx, E.CLOSE_PARAGRAPH)
-        elif name == "div":
-            _emit(ctx, E.CLOSE_SECTION)
-        elif name == "span":
-            _emit(ctx, E.CLOSE_SPAN)
-        elif name == "a":
-            _emit(ctx, E.CLOSE_LINK)
-        elif name == "table":
-            _emit(ctx, E.CLOSE_TABLE)
-        elif name == "caption":
-            _emit(ctx, E.CLOSE_CAPTION)
-        elif name == "tr":
-            _emit(ctx, E.CLOSE_TABLE_ROW)
-        elif name in ("td", "th"):
-            _emit(ctx, E.CLOSE_TABLE_CELL)
-        elif name == "title":
-            ctx.in_title = False
-        elif name in ("script", "iframe") and ctx.in_script:
-            ctx.in_script = False
-        elif name in ("ul", "ol"):
-            _emit(ctx, E.CLOSE_LIST)
-        elif name == "li":
-            _emit(ctx, E.CLOSE_LIST_ITEM)
-        elif name == "b":
-            _emit(ctx, E.CLOSE_BOLD)
-        elif name == "u":
-            _emit(ctx, E.CLOSE_UNDERLINE)
-        return
-    if name == "style":
-        ctx.in_style = True
-    elif name in PARAGRAPH_ELEMENTS:
-        _emit(ctx, E.PARAGRAPH, _styling(node))
-    elif name == "div":
-        _emit(ctx, E.SECTION, _styling(node))
-    elif name == "span":
-        _emit(ctx, E.SPAN, _styling(node))
-    elif name == "a":
-        url = node.attrs.get("href")
-        if url is not None:
-            if url[:1] == "#" or url.startswith("javascript"):
-                url = ""
-        else:
-            url = ""
-        _emit(ctx, E.LINK, (url, _styling(node)))
-    elif name == "img":
-        src = node.attrs.get("src")
-        ocr_text = None
-        decoded = decode_data_url(src)
-        if decoded is not None:
-            from docwire_spark.kernel.ocr import ocr_image
-
-            ocr_text = ocr_image(decoded[1])
-        _emit(
-            ctx, E.IMAGE,
-            (node.attrs.get("alt"), ocr_text, src, _styling(node)),
-        )
-    elif name == "table":
-        _emit(ctx, E.TABLE, _styling(node))
-    elif name == "caption":
-        _emit(ctx, E.CAPTION, _styling(node))
-    elif name == "tr":
-        _emit(ctx, E.TABLE_ROW, _styling(node))
-    elif name in ("td", "th"):
-        _emit(ctx, E.TABLE_CELL, _styling(node))
-    elif name in ("ul", "ol"):
-        style_type_none = False
-        style_attr = node.attrs.get("style")
-        if style_attr is not None:
-            if "list-style: none" in style_attr:
-                style_type_none = True
-        elif name == "ol" and ctx.turn_off_ol:
-            style_type_none = True
-        elif name == "ul" and ctx.turn_off_ul:
-            style_type_none = True
-        list_type = "none" if style_type_none else ("decimal" if name == "ol" else "disc")
-        _emit(ctx, E.LIST, (list_type, _styling(node)))
-    elif name == "br":
-        ctx.last_char = "\0"
-        _emit(ctx, E.BREAK_LINE, _styling(node))
-    elif name == "li":
-        _emit(ctx, E.LIST_ITEM, _styling(node))
-    elif name == "title":
-        ctx.in_title = True
-    elif name in ("script", "iframe"):
-        ctx.in_script = True
-    elif name == "b":
-        _emit(ctx, E.BOLD, _styling(node))
-    elif name == "u":
-        _emit(ctx, E.UNDERLINE, _styling(node))
-    elif name == "meta":
-        _handle_meta(ctx, node.attrs)
+def _flush(buf, last, name, append):
+    """Emit the text run ``buf`` read since the previous tag, before
+    tag ``name``; returns the new last character.  Trimming first and
+    then collapsing the inner whitespace runs gives the same bytes as
+    collapsing first, and spares the copy in the common case of a run
+    whose only repeated whitespace is at its ends."""
+    if last in _WS_OR_START:
+        buf = buf.lstrip(_ASCII_WS)
+        if not buf:
+            return last
+    if name in _TRIM_BEFORE:
+        buf = buf.rstrip(_ASCII_WS)
+        if buf:
+            append((E.TEXT, _ASCII_WS_RUN.sub(" ", buf)))
+        return "\0"
+    text = _ASCII_WS_RUN.sub(" ", buf)
+    append((E.TEXT, text))
+    return text[-1]
 
 
-def _process_node(ctx, node):
-    """Iterative DOM walk (explicit stack): crawl pages nest
-    thousands of elements deep, far past Python's recursion limit —
-    the reference's lexbor walk is iterative too."""
-    if node is None:
-        return
-    stack = [(node, False)]
+def _text_content(node):
+    out = []
+    stack = [iter(node[2])]
     while stack:
-        cur, closing = stack.pop()
-        if closing:
-            _process_tag(ctx, cur, True)
-            continue
-        if cur.type == ELEMENT:
-            _process_tag(ctx, cur, False)
-            stack.append((cur, True))
-        elif cur.type == TEXT:
-            if not (ctx.in_metadata or ctx.in_title or ctx.in_script):
-                _process_text(ctx, cur.text)
-        for child in reversed(cur.children):
-            stack.append((child, False))
+        for kid in stack[-1]:
+            if kid.__class__ is str:
+                out.append(kid)
+            else:
+                stack.append(iter(kid[2]))
+                break
+        else:
+            stack.pop()
+    return "".join(out)
+
+
+def _walk(roots, events, meta, turn_off_ul, turn_off_ol):
+    """Emit the events of each (element, in_head) root in ``roots``,
+    the element included.  Iterative (one list iterator per open
+    element): crawl pages nest thousands of elements deep, far past
+    Python's recursion limit — the reference's lexbor walk is iterative
+    too.  Text is collected raw per run and collapsed once at the next
+    tag; the title / script / style / head flags only change at tags,
+    so ``mode`` (0 keep, 1 drop, 2 style sheet) is recomputed there."""
+    append = events.append
+    buf = ""
+    last = "\0"
+    in_title = in_script = in_style = False
+    style_text = []
+    for root, in_head in roots:
+        mode = 1 if in_head else 0
+        stack = []
+        it = iter((root,))
+        while True:
+            for node in it:
+                if node.__class__ is str:
+                    if mode == 0:
+                        if buf:
+                            buf += node
+                        elif last in _WS_OR_START:
+                            # the run's left trim, done early: a blank
+                            # run then costs no flush at all
+                            buf = node.lstrip(_ASCII_WS)
+                        else:
+                            buf = node
+                    elif mode == 2:
+                        style_text.append(node)
+                    continue
+                name = node[0]
+                if buf:
+                    last = _flush(buf, last, name, append)
+                    buf = ""
+                op = _OPEN.get(name)
+                if op is None:
+                    pass
+                elif op.__class__ is int:
+                    attrs = node[1]
+                    append((op, _styling(attrs) if attrs else None))
+                else:
+                    attrs = parse_attrs(node[1]) if node[1] else {}
+                    if name == "a":
+                        url = attrs.get("href")
+                        if url is not None:
+                            if url[:1] == "#" or url.startswith("javascript"):
+                                url = ""
+                        else:
+                            url = ""
+                        append((E.LINK, (url, _styling(attrs))))
+                    elif name == "img":
+                        src = attrs.get("src")
+                        ocr_text = None
+                        decoded = decode_data_url(src)
+                        if decoded is not None:
+                            from docwire_spark.kernel.ocr import ocr_image
+
+                            ocr_text = ocr_image(decoded[1])
+                        append((E.IMAGE, (
+                            attrs.get("alt"), ocr_text, src, _styling(attrs),
+                        )))
+                    elif name == "ul" or name == "ol":
+                        style_type_none = False
+                        style_attr = attrs.get("style")
+                        if style_attr is not None:
+                            if "list-style: none" in style_attr:
+                                style_type_none = True
+                        elif name == "ol" and turn_off_ol:
+                            style_type_none = True
+                        elif name == "ul" and turn_off_ul:
+                            style_type_none = True
+                        list_type = (
+                            "none" if style_type_none
+                            else ("decimal" if name == "ol" else "disc")
+                        )
+                        append((E.LIST, (list_type, _styling(attrs))))
+                    elif name == "br":
+                        last = "\0"
+                        append((E.BREAK_LINE, _styling(attrs)))
+                    elif name == "meta":
+                        _handle_meta(meta, attrs)
+                    else:
+                        if name == "style":
+                            in_style = True
+                        elif name == "title":
+                            in_title = True
+                        else:  # script, iframe
+                            in_script = True
+                        mode = 1 if in_title or in_script else (
+                            2 if in_style else (1 if in_head else 0))
+                stack.append((name, it))
+                it = iter(node[2])
+                break
+            else:
+                if not stack:
+                    break
+                name, it = stack.pop()
+                if buf:
+                    last = _flush(buf, last, name, append)
+                    buf = ""
+                op = _CLOSE.get(name)
+                if op is None:
+                    continue
+                if op.__class__ is int:
+                    append((op, None))
+                    continue
+                if name == "style":
+                    in_style = False
+                    append((E.STYLE, "".join(style_text)))
+                    style_text = []
+                elif name == "title":
+                    in_title = False
+                else:  # script, iframe
+                    in_script = False
+                mode = 1 if in_title or in_script else (
+                    2 if in_style else (1 if in_head else 0))
 
 
 def html_to_events(text: str):
@@ -328,22 +347,15 @@ def html_to_events(text: str):
     Event stream mirrors reference html_parser::parse:
     document ... close_document.
     """
-    root = parse_html(text)
-    head = root.find("head")
-    body = root.find("body")
-
-    ctx = _Ctx()
-    if head is not None:
-        head_text = head.text_content()
+    html = parse_html(text)
+    head, body = html[2][0], html[2][1]
+    turn_off_ul = turn_off_ol = False
+    if head[2]:
+        head_text = _text_content(head)
         if head_text:
-            ctx.turn_off_ul, ctx.turn_off_ol = parse_css_list_style(head_text)
-
-    _emit(ctx, E.DOCUMENT)
-    if head is not None:
-        ctx.in_head = True
-        _process_node(ctx, head)
-        ctx.in_head = False
-    if body is not None:
-        _process_node(ctx, body)
-    _emit(ctx, E.CLOSE_DOCUMENT)
-    return ctx.events, ctx.meta
+            turn_off_ul, turn_off_ol = parse_css_list_style(head_text)
+    events = [(E.DOCUMENT, None)]
+    meta = {}
+    _walk(((head, True), (body, False)), events, meta, turn_off_ul, turn_off_ol)
+    events.append((E.CLOSE_DOCUMENT, None))
+    return events, meta

@@ -15,7 +15,9 @@ Reference parity:
   output message.", a pipeline error message -> 500 "Pipeline Error:
   ...", a handler crash -> 500 "Internal Server Error: ...", an
   oversized body (``set_payload_max_length``, http_server.cpp:72) ->
-  413, an unmatched path or method -> 404.  TLS
+  413, a POST without Content-Length -> 411 and one whose
+  Content-Length is not a decimal number -> 400 (both close the
+  connection), an unmatched path or method -> 404.  TLS
   (http_server.cpp:106-127 and generate_self_signed_cert :287-330) is
   intentionally out of scope here; threading is stdlib
   ``ThreadingHTTPServer`` (thread per request) instead of a fixed pool
@@ -176,7 +178,19 @@ class PipelineServer:
                 if pipeline is None:
                     self._fail(404, "Not Found")
                     return
-                length = int(self.headers.get("Content-Length") or 0)
+                raw_length = self.headers.get("Content-Length")
+                if raw_length is None:
+                    # no chunked decoding here: a body of unknown size
+                    # can't be read, and the pipeline must not run on ""
+                    self.close_connection = True
+                    self._fail(411, "Length Required")
+                    return
+                raw_length = raw_length.strip()
+                if not (raw_length.isascii() and raw_length.isdigit()):
+                    self.close_connection = True
+                    self._fail(400, "Bad Request: malformed Content-Length")
+                    return
+                length = int(raw_length)
                 if length > server.body_limit:
                     # can't safely drain an oversized body; close after
                     self.close_connection = True

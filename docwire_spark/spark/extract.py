@@ -252,10 +252,6 @@ def _make_extract_batches(
     return _extract_batches
 
 
-# default-shape body (no binary column) for callers that import it
-_extract_batches = _make_extract_batches(with_binary=False)
-
-
 def extract_pages(
     pages: DataFrame,
     n_shards: int = DEFAULT_SHARDS,

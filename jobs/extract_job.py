@@ -4,7 +4,7 @@
         jobs/extract_job.py --n-docs 20000 --out /tmp/out
 
 Reads/creates the Common-Crawl-style pages table, runs the sharded
-mapInPandas extraction, writes results + per-partition metrics through
+mapInArrow extraction, writes results + per-partition metrics through
 the checkpointed writer, and prints a JSON summary line (wall time,
 docs/sec, failures).
 
@@ -41,9 +41,7 @@ def main():
                     "generation")
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-
-    from docwire_spark.spark.extract import extract_pages, metrics_by_partition
+    from docwire_spark.spark.extract import extract_pages
     from docwire_spark.spark.lineage import CheckpointedWriter
     from docwire_spark.spark.session import build_session
 
@@ -61,7 +59,7 @@ def main():
         },
     )
     # AQE only inserts materialization barriers here — the extraction
-    # pipeline is scan -> repartition -> mapInPandas -> agg with no
+    # pipeline is scan -> repartition -> mapInArrow -> agg with no
     # joins or skewed aggregations to re-plan (measured: 69s -> 42s on
     # a 600k-doc run at local[16] with it off)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -123,7 +121,6 @@ def main():
     n_rows = counters["docs"].value
     n_failed = counters["failed"].value
     bytes_in = counters["bytes"].value
-    _ = metrics_by_partition, F  # exported paths exercised in tests
 
     print(
         json.dumps(

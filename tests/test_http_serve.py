@@ -118,6 +118,38 @@ def test_body_limit_413(server):
     assert exc_info.value.code == 413
 
 
+def _raw_post(server, length_header):
+    """POST a small body with the given Content-Length header value
+    (None: no header at all); returns (status, body)."""
+    import http.client
+
+    host, port = server.url.split("//")[1].split(":")
+    conn = http.client.HTTPConnection(host, int(port), timeout=10)
+    try:
+        conn.putrequest("POST", "/extract")
+        if length_header is not None:
+            conn.putheader("Content-Length", length_header)
+        conn.endheaders()
+        conn.send(b"<p>x</p>")
+        resp = conn.getresponse()
+        return resp.status, resp.read()
+    finally:
+        conn.close()
+
+
+def test_missing_content_length_411(server):
+    status, body = _raw_post(server, None)
+    assert status == 411
+    assert body == b"Length Required"
+
+
+@pytest.mark.parametrize("value", ["abc", "-1", "1_0", "", "8 8"])
+def test_malformed_content_length_400(server, value):
+    status, body = _raw_post(server, value)
+    assert status == 400
+    assert b"malformed Content-Length" in body
+
+
 def test_handler_crash_500(server):
     with pytest.raises(urllib.error.HTTPError) as exc_info:
         _post(server.url + "/boom", b"x")
