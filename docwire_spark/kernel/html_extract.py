@@ -26,15 +26,12 @@ elements whose events carry them.
 
 from __future__ import annotations
 
-import re
-
 from docwire_spark.kernel import events as E
 from docwire_spark.kernel.dates import parse_iso8601_or_legacy
 from docwire_spark.kernel.dom import parse_attrs, parse_html
 
-#: the ASCII whitespace runs that are not already a single space
-_ASCII_WS_RUN = re.compile(r" [ \t\n\r\f\v]+|[\t\n\r\f\v][ \t\n\r\f\v]*")
 _ASCII_WS = " \t\n\r\f\v"
+_ASCII_WS_TO_SPACE = str.maketrans("\t\n\r\f\v", "     ")
 #: a previous character after which a text run is left-trimmed
 _WS_OR_START = _ASCII_WS + "\0"
 
@@ -186,12 +183,22 @@ def _handle_meta(meta, attrs):
                 meta["last_modification_date"] = dt
 
 
+def _collapse(text):
+    """Every run of ASCII whitespace -> one space.  Substring tests and
+    ``replace`` run at C speed; a regex substitution steps through
+    every character."""
+    if "\n" in text or "\t" in text or "\r" in text or "\f" in text or "\v" in text:
+        text = text.translate(_ASCII_WS_TO_SPACE)
+    while "  " in text:
+        text = text.replace("  ", " ")
+    return text
+
+
 def _flush(buf, last, name, append):
     """Emit the text run ``buf`` read since the previous tag, before
     tag ``name``; returns the new last character.  Trimming first and
     then collapsing the inner whitespace runs gives the same bytes as
-    collapsing first, and spares the copy in the common case of a run
-    whose only repeated whitespace is at its ends."""
+    collapsing first, on a shorter string."""
     if last in _WS_OR_START:
         buf = buf.lstrip(_ASCII_WS)
         if not buf:
@@ -199,9 +206,9 @@ def _flush(buf, last, name, append):
     if name in _TRIM_BEFORE:
         buf = buf.rstrip(_ASCII_WS)
         if buf:
-            append((E.TEXT, _ASCII_WS_RUN.sub(" ", buf)))
+            append((E.TEXT, _collapse(buf)))
         return "\0"
-    text = _ASCII_WS_RUN.sub(" ", buf)
+    text = _collapse(buf)
     append((E.TEXT, text))
     return text[-1]
 
@@ -313,8 +320,18 @@ def _walk(roots, events, meta, turn_off_ul, turn_off_ol):
                             in_script = True
                         mode = 1 if in_title or in_script else (
                             2 if in_style else (1 if in_head else 0))
+                kids = node[2]
+                if mode == 0 and len(kids) == 1 and kids[0].__class__ is str:
+                    # the common shape, one text child (<p>text</p>):
+                    # text and close in one step (mode 0 rules out the
+                    # flag tags, so the close is an event kind or none)
+                    last = _flush(kids[0], last, name, append)
+                    op = _CLOSE.get(name)
+                    if op is not None:
+                        append((op, None))
+                    continue
                 stack.append((name, it))
-                it = iter(node[2])
+                it = iter(kids)
                 break
             else:
                 if not stack:

@@ -212,7 +212,7 @@ FROM documents
 # empty paragraph as just the paragraph break — which is exactly
 # trim(collapse('')) || '\n\n'.  The collapse class matches the
 # kernel's ASCII whitespace run (space/tab/newline/CR/formfeed/
-# vertical-tab — html_extract._ASCII_WS_RUN), so whitespace-only
+# vertical-tab — html_extract._collapse), so whitespace-only
 # and control-whitespace text reconstruct identically too.
 
 

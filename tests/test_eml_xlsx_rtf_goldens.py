@@ -9,6 +9,7 @@ import pytest
 
 from docwire_spark.kernel.api import extract
 from docwire_spark.kernel.meta_writer import render_metadata
+from tests.conftest import reference_fixture
 
 REF = "/root/reference/tests"
 
@@ -58,10 +59,11 @@ ODF = (
 
 
 def _golden(name):
-    path = os.path.join(REF, name)
-    if not os.path.exists(path + ".out"):
-        pytest.skip(f"no golden for {name}")
-    return open(path, "rb").read(), open(path + ".out", "rb").read()
+    # skips (and is counted) when the golden is missing; a golden
+    # without its input still fails
+    expected = reference_fixture(name + ".out")
+    with open(os.path.join(REF, name), "rb") as f:
+        return f.read(), expected
 
 
 @pytest.mark.parametrize(
