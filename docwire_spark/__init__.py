@@ -6,7 +6,7 @@ DocWire SDK (reference: silver-byte/docwire), re-expressed Spark-first:
 - ``kernel``   — pure-Python, dependency-light extraction kernels
   (HTML5 tokenizer + DOM + whitespace machine, plain-text renderer,
   charset normalization, MIME sniffing, TXT/XML/PDF parsers).  These run
-  *inside* vectorized ``mapInPandas`` UDFs; no Spark imports here.
+  *inside* Arrow-batched ``mapInArrow`` UDFs; no Spark imports here.
 - ``spark``    — the distributed shell: url-hash sharding, skew salting,
   oversize-row isolation, per-partition lineage/metrics, idempotent
   checkpointed writes, synthetic Common-Crawl-style corpus generator.

@@ -3,11 +3,12 @@
 Each query synthesizes the north-rule pages table
 ``(url, html BINARY, ...)`` from ``documents.text`` with a known HTML
 template, runs the REAL distributed pipeline
-(``extract.extract_pages``: oversize split -> url-hash repartition ->
-mapInPandas kernel), and the DuckDB oracle reconstructs the expected
-extracted bytes analytically from the template + the reference's
-rendering rules (SURVEY.md §2.5.1) — so the driver's hash compare is a
-byte-identity gate on the whole Spark extraction path:
+(``extract.extract_pages``: byte-bounded scan splits -> mapInArrow
+kernel, url-hash bucket computed, no shuffle), and the DuckDB oracle
+reconstructs the expected extracted bytes analytically from the
+template + the reference's rendering rules (SURVEY.md §2.5.1) — so
+the driver's hash compare is a byte-identity gate on the whole Spark
+extraction path:
 
 - ``extract_plain``  <p>text</p>             -> collapsed text + "\\n\\n"
 - ``extract_rich``   link + ordered list      -> "<url>..." + "N. item"

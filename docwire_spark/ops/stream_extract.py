@@ -3,7 +3,7 @@
 ``extract_stream_plain`` runs the REAL streaming path end-to-end:
 synthesized pages written to a parquet drop directory -> file-source
 ``readStream`` -> the batch-identical extraction transformation
-(``streaming.extract_stream``) -> memory sink drained with
+(``extract_pages`` on the streaming DataFrame) -> memory sink drained with
 ``availableNow`` -> the sink table returned as the query result.  The
 DuckDB oracle is the same analytic reconstruction the batch
 ``extract_plain`` query uses — proving the streaming mode is
@@ -35,7 +35,7 @@ def _cleanup(*dirs: str) -> None:
 
 
 def extract_stream_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from docwire_spark.streaming.extract_stream import extract_stream
+    from docwire_spark.spark.extract import extract_pages
 
     docs = load(spark, sf_dir, "documents")
     pages = docs.select(
@@ -67,7 +67,7 @@ def extract_stream_plain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .format("parquet")
         .load(drop_dir)
     )
-    extracted = extract_stream(stream_pages, n_shards=16)
+    extracted = extract_pages(stream_pages, n_shards=16)
     sink = f"stream_oracle_sink_{next(_SINK_IDS)}_{os.getpid()}"
     try:
         q = (
@@ -95,63 +95,7 @@ SELECT doc_id, 'text/html' AS mime,
 FROM documents
 """
 
-def stream_dedup_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom STATEFUL streaming operator under the full oracle gate:
-    pages stream in as four single-file micro-batches
-    (maxFilesPerTrigger=1), the applyInPandasWithState dedup keeps the
-    per-host seen-fingerprint set across batches, and the emitted
-    first-seen rows are projected to the deterministic (host, fp) SET
-    — which duplicate row wins is order-dependent, the set of
-    surviving fingerprints is not, so DuckDB can verify it exactly.
-    Payload = first two tokens of each document (collides across docs
-    by construction -> real in-batch AND cross-batch suppressions)."""
-    from docwire_spark.streaming.dedup_stream import stream_dedup
-
-    docs = load(spark, sf_dir, "documents")
-    pages = docs.select(
-        F.concat(F.lit("https://"), F.col("source"), F.lit("/d/"),
-                 F.col("doc_id").cast("string")).alias("url"),
-        F.encode(
-            F.expr(
-                "array_join(slice(regexp_extract_all("
-                "lower(coalesce(text, '')),"
-                " '[a-z0-9]+', 0), 1, 2), ' ')"
-            ),
-            "UTF-8",
-        ).alias("html"),
-    )
-    drop_dir = tempfile.mkdtemp(prefix="stream_state_src_")
-    chk_dir = tempfile.mkdtemp(prefix="stream_state_chk_")
-    out_dir = tempfile.mkdtemp(prefix="stream_state_out_")
-    pages.repartition(4).write.mode("overwrite").parquet(drop_dir)
-
-    stream_pages = (
-        spark.readStream.schema("url string, html binary")
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)  # force multiple micro-batches
-        .load(drop_dir)
-    )
-    try:
-        q = (
-            stream_dedup(stream_pages)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", os.path.join(chk_dir, "chk"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        res = (
-            spark.read.parquet(out_dir).select("host", "fp").distinct()
-            .localCheckpoint(eager=True)  # materialize so out_dir can go
-        )
-    finally:
-        _cleanup(drop_dir, chk_dir, out_dir)
-    return res
-
-
-STREAM_DEDUP_STATEFUL_SQL = """
+STREAM_DEDUP_SQL = """
 SELECT DISTINCT source AS host,
        md5(COALESCE(array_to_string(
          regexp_extract_all(lower(COALESCE(text, '')),
@@ -162,12 +106,18 @@ SELECT DISTINCT source AS host,
 FROM documents
 """
 
+
 def stream_dedup_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The native streaming-dedup scale path under the oracle gate:
+    """Streaming dedup under the full oracle gate: pages stream in as
+    four single-file micro-batches (maxFilesPerTrigger=1), and
     dropDuplicates on (host, fp) keeps ONE O(1) state-store row per
-    fingerprint (RocksDB-backed on a cluster) — same survivor set as
-    the custom stateful operator, radically cheaper state.  Four
-    micro-batches force real cross-batch state lookups."""
+    fingerprint across them (RocksDB-backed on a cluster).  The
+    emitted first-seen rows are projected to the deterministic
+    (host, fp) SET — which duplicate row wins is order-dependent, the
+    set of surviving fingerprints is not, so DuckDB can verify it
+    exactly.  Payload = first two tokens of each document (collides
+    across docs by construction -> real in-batch AND cross-batch
+    suppressions)."""
     from docwire_spark.streaming.dedup_stream import stream_dedup_native
 
     docs = load(spark, sf_dir, "documents")
@@ -313,7 +263,7 @@ def stream_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream == batch for the composed pipeline too."""
     from docwire_spark.ops.corpus_filter import redact_pii_column
     from docwire_spark.ops.common import TOKENS_EXPR
-    from docwire_spark.streaming.extract_stream import extract_stream
+    from docwire_spark.spark.extract import extract_pages
 
     docs = load(spark, sf_dir, "documents")
     pages = docs.select(
@@ -338,7 +288,7 @@ def stream_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(drop_dir)
     )
     cleaned = redact_pii_column(
-        extract_stream(stream_pages, n_shards=16)
+        extract_pages(stream_pages, n_shards=16)
         .withColumn("text", F.col("extracted_text"))
         .withColumn(
             "n_tok",
@@ -394,15 +344,13 @@ FROM documents
 
 QUERIES = {
     "extract_stream_plain": extract_stream_plain,
-    "stream_dedup_stateful": stream_dedup_stateful,
     "stream_dedup_native": stream_dedup_native,
     "stream_events_windowed": stream_events_windowed,
     "stream_corpus_clean": stream_corpus_clean,
 }
 ORACLES = {
     "extract_stream_plain": EXTRACT_STREAM_PLAIN_SQL,
-    "stream_dedup_stateful": STREAM_DEDUP_STATEFUL_SQL,
-    "stream_dedup_native": STREAM_DEDUP_STATEFUL_SQL,
+    "stream_dedup_native": STREAM_DEDUP_SQL,
     "stream_events_windowed": STREAM_EVENTS_WINDOWED_SQL,
     "stream_corpus_clean": STREAM_CORPUS_CLEAN_SQL,
 }

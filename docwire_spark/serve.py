@@ -15,9 +15,10 @@ Reference parity:
   output message.", a pipeline error message -> 500 "Pipeline Error:
   ...", a handler crash -> 500 "Internal Server Error: ...", an
   oversized body (``set_payload_max_length``, http_server.cpp:72) ->
-  413, a POST without Content-Length -> 411 and one whose
-  Content-Length is not a decimal number -> 400 (both close the
-  connection), an unmatched path or method -> 404.  TLS
+  413 (the body is then drained, bounded, before the close), a POST
+  without Content-Length -> 411 and one whose Content-Length is not a
+  decimal number -> 400 (both close the connection), an unmatched
+  path or method -> 404.  TLS
   (http_server.cpp:106-127 and generate_self_signed_cert :287-330) is
   intentionally out of scope here; threading is stdlib
   ``ThreadingHTTPServer`` (thread per request) instead of a fixed pool
@@ -45,6 +46,7 @@ from __future__ import annotations
 import http.server
 import re
 import threading
+import time
 import urllib.error
 import urllib.request
 import uuid
@@ -58,6 +60,12 @@ USER_AGENT = f"docwire-spark/{__version__}"
 #: http::body_limit default (http_server.h uses httplib's default;
 #: we pick an explicit bound so the 413 path is always defined)
 DEFAULT_BODY_LIMIT = 128 * 1024 * 1024
+
+#: bounds on reading and discarding an oversized body after its 413:
+#: closing a socket with unread data resets the connection, and a
+#: client still sending its body would lose the 413 to that reset
+_DRAIN_BYTES = 16 * 1024 * 1024
+_DRAIN_SECONDS = 5.0
 
 _NO_OUTPUT_MSG = (
     "Error: The processing pipeline did not produce any output message."
@@ -163,6 +171,25 @@ class PipelineServer:
             def _fail(self, status: int, message: str):
                 self._respond(status, message.encode(), "text/plain")
 
+            def _drain(self, length: int):
+                """Read and discard up to ``_DRAIN_BYTES`` of the
+                unread body within ``_DRAIN_SECONDS``, so the close
+                after a 413 is orderly for a client still sending."""
+                left = min(length, _DRAIN_BYTES)
+                deadline = time.monotonic() + _DRAIN_SECONDS
+                try:
+                    while left > 0:
+                        remaining = deadline - time.monotonic()
+                        if remaining <= 0:
+                            break
+                        self.connection.settimeout(remaining)
+                        chunk = self.rfile.read1(min(left, 1 << 16))
+                        if not chunk:
+                            break
+                        left -= len(chunk)
+                except OSError:  # timeout or reset: close regardless
+                    pass
+
             def do_GET(self):  # only POST handlers exist -> 404
                 self._fail(404, "Not Found")
 
@@ -192,9 +219,9 @@ class PipelineServer:
                     return
                 length = int(raw_length)
                 if length > server.body_limit:
-                    # can't safely drain an oversized body; close after
                     self.close_connection = True
                     self._fail(413, "Payload Too Large")
+                    self._drain(length)
                     return
                 body = self.rfile.read(length) if length else b""
                 mime_hint = _media_type(self.headers.get("Content-Type"))

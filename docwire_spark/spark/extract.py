@@ -5,8 +5,7 @@ Pipeline (north-rule shape):
     pages(url, warc_ts, html, text, lang)
       -> byte-bounded scan splits (maxPartitionBytes; no pre-shuffle —
          url-hash sharding is the computed ``bucket`` column, applied
-         physically at the commit boundary; opt-in repartition for
-         pathological inputs)
+         physically at the commit boundary)
          [optional oversize split: length(html) > threshold -> own branch]
       -> mapInArrow(extract_batch)    # Arrow batches, no per-row Python
       -> union(oversize branch)
@@ -14,6 +13,10 @@ Pipeline (north-rule shape):
                  meta, error, n_events, bytes_in, partition_id, bucket)
       -> metrics = groupBy(partition_id) aggregation
       -> checkpointed idempotent write sharded by bucket (lineage.py)
+
+The same transformation runs on streaming DataFrames
+(``streaming.extract_stream``), so both modes share one batch body
+and one result schema.
 
 Skew handling: a host-level salt key helper for host-grouped
 operations (extraction itself shards by url hash, which is uniform;
@@ -23,7 +26,7 @@ Scale notes (100 TB posture):
 - only ``html`` + ``url`` are read by the extraction scan (column
   pruning: select before mapInArrow so parquet never materializes
   unused columns)
-- oversized rows: uniformly spread by the url-hash shuffle by default;
+- oversized rows: spread by the byte-bounded scan splits by default;
   the opt-in oversize branch isolates extreme rows on their own full
   shard fanout when the size distribution demands it (see
   extract_pages docstring for the measured cost rationale)
@@ -41,42 +44,14 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from docwire_spark.spark.lineage import url_bucket
+
 OVERSIZE_BYTES = 262_144  # 256 KiB: rows above this get the low-fanout branch
 DEFAULT_SHARDS = 128
 
-SPAN_TYPE = ArrayType(
-    StructType(
-        [
-            StructField("start", LongType()),
-            StructField("end", LongType()),
-            StructField("kind", StringType()),
-        ]
-    )
-)
-
-_BASE_FIELDS = [
-    StructField("url", StringType()),
-    StructField("mime", StringType()),
-    StructField("mime_confidence", StringType()),
-    StructField("extracted_text", StringType()),
-    StructField("spans", SPAN_TYPE),
-    StructField("meta_json", StringType()),
-    StructField("error", StringType()),
-    StructField("n_events", IntegerType()),
-    StructField("bytes_in", LongType()),
-    StructField("partition_id", IntegerType()),
-    StructField("bucket", IntegerType()),
-]
-
-RESULT_SCHEMA = StructType(_BASE_FIELDS)
-RESULT_SCHEMA_BINARY = StructType(
-    _BASE_FIELDS[:4] + [StructField("extracted_bytes", BinaryType())]
-    + _BASE_FIELDS[4:]
-)
-
-
-#: exporter name -> result column (reference html_writer /
-#: meta_data_writer / csv_writer renders, SURVEY.md §2.5)
+#: exporter name (an ``ExtractResult`` field) -> result column
+#: (reference html_writer / meta_data_writer / csv_writer renders,
+#: SURVEY.md §2.5)
 EXPORT_COLUMNS = {
     "html": "extracted_html",
     "meta_text": "meta_text",
@@ -87,49 +62,39 @@ EXPORT_COLUMNS = {
 def _result_schema(
     with_binary: bool, with_main_content: bool, exports: tuple = ()
 ) -> StructType:
-    base = RESULT_SCHEMA_BINARY if with_binary else RESULT_SCHEMA
-    fields = list(base.fields)
-    at = next(
-        i for i, f in enumerate(fields) if f.name == "extracted_text"
-    ) + 1
-    if with_main_content:
-        fields.insert(at, StructField("main_content", StringType()))
-        at += 1
-    for name in exports:
-        fields.insert(at, StructField(EXPORT_COLUMNS[name], StringType()))
-        at += 1
-    return StructType(fields)
-
-
-#: pyarrow types per result column (must mirror RESULT_SCHEMA)
-_PA_SPAN = None  # built lazily on the executor (pyarrow import)
-
-
-def _pa_types():
-    import pyarrow as pa
-
-    span = pa.list_(pa.struct([
-        pa.field("start", pa.int64()),
-        pa.field("end", pa.int64()),
-        pa.field("kind", pa.string()),
-    ]))
-    return {
-        "url": pa.string(), "mime": pa.string(),
-        "mime_confidence": pa.string(), "extracted_text": pa.string(),
-        "extracted_bytes": pa.binary(), "main_content": pa.string(),
-        "extracted_html": pa.string(), "meta_text": pa.string(),
-        "table_csv": pa.string(), "spans": span, "meta_json": pa.string(),
-        "error": pa.string(), "n_events": pa.int32(),
-        "bytes_in": pa.int64(), "partition_id": pa.int32(),
-        "bucket": pa.int32(),
-    }
+    """The one result schema; the optional columns sit right after
+    ``extracted_text``.  The batch body takes its Arrow types from it."""
+    span = StructType([
+        StructField("start", LongType()),
+        StructField("end", LongType()),
+        StructField("kind", StringType()),
+    ])
+    return StructType(
+        [StructField(name, StringType()) for name in (
+            "url", "mime", "mime_confidence", "extracted_text",
+            *(["main_content"] if with_main_content else []),
+            *(EXPORT_COLUMNS[name] for name in exports),
+        )]
+        + ([StructField("extracted_bytes", BinaryType())]
+           if with_binary else [])
+        + [
+            StructField("spans", ArrayType(span)),
+            StructField("meta_json", StringType()),
+            StructField("error", StringType()),
+            StructField("n_events", IntegerType()),
+            StructField("bytes_in", LongType()),
+            StructField("partition_id", IntegerType()),
+            StructField("bucket", IntegerType()),
+        ]
+    )
 
 
 def _make_extract_batches(
+    schema: StructType,
     with_binary: bool,
-    with_main_content: bool = False,
-    exports: tuple = (),
-    counters: dict | None = None,
+    with_main_content: bool,
+    exports: tuple,
+    counters: dict | None,
 ):
     """mapInArrow body factory: runs the pure-Python kernel per Arrow
     RecordBatch.  Arrow in/out directly (round 3: measured ~8% faster
@@ -145,18 +110,15 @@ def _make_extract_batches(
     Imports live inside so the function ships cleanly to executors via
     --py-files.
     """
-    col_names = [
-        f.name for f in _result_schema(with_binary, with_main_content,
-                                       exports).fields
-    ]
 
     def _extract_batches(iterator):
         import pyarrow as pa
         from pyspark import TaskContext
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         from docwire_spark.kernel.api import extract
 
-        pa_types = _pa_types()
+        arrow = to_arrow_schema(schema)
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else -1
 
@@ -164,32 +126,7 @@ def _make_extract_batches(
             urls = batch.column("url").to_pylist()
             htmls = batch.column("html").to_pylist()
             n = len(urls)
-            # bucket is computed JVM-side on the NARROW input (url
-            # only) and passed through as the original Arrow array —
-            # zero conversion cost
-            names = batch.schema.names
-            bucket_arr = (
-                batch.column("bucket").cast(pa.int32())
-                if "bucket" in names else pa.nulls(n, pa.int32())
-            )
-            out = {
-                "mime": [],
-                "mime_confidence": [],
-                "extracted_text": [],
-                "main_content": [],
-                "extracted_bytes": [],
-                "spans": [],
-                "meta_json": [],
-                "error": [],
-                "n_events": [],
-                "bytes_in": [],
-            }
-            for name in exports:
-                out[EXPORT_COLUMNS[name]] = []
-            if not with_binary:
-                del out["extracted_bytes"]
-            if not with_main_content:
-                del out["main_content"]
+            out = {name: [] for name in arrow.names}
             for url, html in zip(urls, htmls):
                 data = html if html is not None else b""
                 res = extract(
@@ -205,10 +142,7 @@ def _make_extract_batches(
                 if with_main_content:
                     out["main_content"].append(res.main_content)
                 for name in exports:
-                    rendered = getattr(
-                        res, {"html": "html", "meta_text": "meta_text",
-                              "csv": "csv"}[name]
-                    )
+                    rendered = getattr(res, name)
                     out[EXPORT_COLUMNS[name]].append(
                         rendered.decode("utf-8", "replace")
                         if rendered is not None else None
@@ -235,19 +169,18 @@ def _make_extract_batches(
                 counters["failed"].add(
                     sum(1 for e in out["error"] if e is not None)
                 )
-            arrays = []
-            for cname in col_names:
-                if cname == "url":
-                    arrays.append(batch.column("url").cast(pa.string()))
-                elif cname == "partition_id":
-                    arrays.append(
-                        pa.array([pid] * n, pa.int32())
-                    )
-                elif cname == "bucket":
-                    arrays.append(bucket_arr)
-                else:
-                    arrays.append(pa.array(out[cname], pa_types[cname]))
-            yield pa.RecordBatch.from_arrays(arrays, col_names)
+            out["partition_id"] = [pid] * n
+            # url and bucket (computed JVM-side on the narrow input)
+            # pass through as the original Arrow arrays
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(f.name).cast(f.type)
+                    if f.name in ("url", "bucket")
+                    else pa.array(out[f.name], f.type)
+                    for f in arrow
+                ],
+                schema=arrow,
+            )
 
     return _extract_batches
 
@@ -259,72 +192,58 @@ def extract_pages(
     with_binary: bool = False,
     with_main_content: bool = False,
     exports: tuple = (),
-    shuffle: bool = False,
     counters: dict | None = None,
 ) -> DataFrame:
-    """Run the extraction pipeline; returns the results DataFrame.
+    """Run the extraction pipeline over a batch or streaming DataFrame
+    of pages; returns the results DataFrame.
 
-    ``bucket`` is a deterministic url-hash bucket (stable across runs
-    and cluster sizes) used by the checkpointed writer for resume.
+    ``bucket`` is the url-hash shard (``lineage.url_bucket``, stable
+    across runs and cluster sizes) the checkpointed writer and the
+    streaming sink commit by.
 
-    url-hash sharding is LOGICAL by default: the bucket is a computed
-    column (pmod(xxhash64(url), n_shards)) and the commit boundary
-    (CheckpointedWriter) shards on it — no physical pre-shuffle.  The
-    parquet/Iceberg scan already yields byte-bounded splits
-    (maxPartitionBytes), which balances per-task extraction cost
-    BETTER than row-count-balanced hash shards, and it never moves the
-    raw html bytes across the cluster (measured: the 1.9 GB shuffle of
-    a 600k-doc corpus cost more wall time than the entire 16-core
-    extraction; at 100 TB the pre-shuffle would be the single largest
-    I/O in the job).  Pass ``shuffle=True`` to force the physical
-    repartition when the input's partitioning is pathological (a few
-    giant unsplittable files, or severely size-skewed splits).
+    url-hash sharding is LOGICAL: the bucket is a computed column and
+    the commit boundary (CheckpointedWriter) shards on it — no
+    physical pre-shuffle.  The parquet/Iceberg scan already yields
+    byte-bounded splits (maxPartitionBytes), which balances per-task
+    extraction cost BETTER than row-count-balanced hash shards, and it
+    never moves the raw html bytes across the cluster (measured: the
+    1.9 GB shuffle of a 600k-doc corpus cost more wall time than the
+    entire 16-core extraction; at 100 TB the pre-shuffle would be the
+    single largest I/O in the job).
 
     Oversized-row handling: scan splits spread the rare giant rows by
     byte budget already.  Pass ``oversize_bytes`` to additionally
     route rows above the threshold through their own branch (a second
     scan + filter) when the size distribution is so extreme that one
     row dominates an Arrow batch.
+
+    ``with_binary`` adds ``extracted_bytes``, the kernel's raw output
+    bytes, for byte-level comparison against reference goldens.
     """
-    src = pages.select(
-        "url", "html",
-        F.pmod(F.xxhash64(F.col("url")), F.lit(n_shards))
-        .cast("int").alias("bucket"),
-    )
+    src = pages.select("url", "html", url_bucket(n_shards).alias("bucket"))
     schema = _result_schema(with_binary, with_main_content, exports)
     batch_fn = _make_extract_batches(
-        with_binary, with_main_content, exports, counters
+        schema, with_binary, with_main_content, exports, counters
     )
-
     if oversize_bytes is None:
-        sharded = (
-            src.repartition(n_shards, F.xxhash64(F.col("url")))
-            if shuffle else src
-        )
-        extracted = sharded.mapInArrow(batch_fn, schema)
-    else:
-        # coalesce: NULL html must not evaporate from both branches
-        # (NULL predicate is neither true nor false) — it belongs in
-        # the normal branch (error/empty-text path of the kernel)
-        is_oversized = (
-            F.coalesce(F.length(F.col("html")), F.lit(0))
-            > F.lit(oversize_bytes)
-        )
-        normal = src.filter(~is_oversized)
-        # oversized rows are individually 50-100x more expensive to
-        # parse: spread the FEW of them over the full shard budget so
-        # no task accumulates a fat tail (this branch is tiny, so its
-        # repartition moves almost no bytes)
-        oversized = src.filter(is_oversized).repartition(
-            n_shards, F.xxhash64(F.col("url"))
-        )
-        if shuffle:
-            normal = normal.repartition(n_shards, F.xxhash64(F.col("url")))
-        extracted = normal.mapInArrow(batch_fn, schema).unionByName(
-            oversized.mapInArrow(batch_fn, schema)
-        )
-
-    return extracted
+        return src.mapInArrow(batch_fn, schema)
+    # coalesce: NULL html must not evaporate from both branches (NULL
+    # predicate is neither true nor false) — it belongs in the normal
+    # branch (error/empty-text path of the kernel)
+    is_oversized = (
+        F.coalesce(F.length(F.col("html")), F.lit(0))
+        > F.lit(oversize_bytes)
+    )
+    # oversized rows are individually 50-100x more expensive to parse:
+    # spread the FEW of them over the full shard budget so no task
+    # accumulates a fat tail (this branch is tiny, so its repartition
+    # moves almost no bytes)
+    oversized = src.filter(is_oversized).repartition(
+        n_shards, F.xxhash64(F.col("url"))
+    )
+    return src.filter(~is_oversized).mapInArrow(batch_fn, schema).unionByName(
+        oversized.mapInArrow(batch_fn, schema)
+    )
 
 
 def salted_host_key(df: DataFrame, host_col: str = "host",

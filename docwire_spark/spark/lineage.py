@@ -25,7 +25,30 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
+
+
+def url_bucket(n_shards: int, url_col: str = "url") -> Column:
+    """The url-hash shard of a row, ``pmod(xxhash64(url), n_shards)``:
+    stable across runs and cluster sizes.  Extraction, the resume
+    filter, compaction and the pipeline's final write all derive it
+    here, so ``filter_uncommitted`` and the commit log always agree."""
+    return F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_shards)).cast("int")
+
+
+def commit_group(groups: int) -> Column:
+    """The commit unit of a row with a ``bucket`` column: bucket
+    ``b`` belongs to group ``b % groups`` (shared by the batch writer
+    and the streaming sink's ``commit_group`` partitioning)."""
+    return F.pmod(F.col("bucket"), F.lit(groups)).cast("int")
+
+
+def _swap_in(staged: str, final: str) -> None:
+    """Atomically rename a staged dir into place, dropping a stale
+    partial left by a killed run."""
+    if os.path.exists(final):
+        shutil.rmtree(final)
+    os.replace(staged, final)
 
 
 def _parquet_row_count(dir_path: str) -> int:
@@ -68,84 +91,56 @@ class CheckpointedWriter:
             os.fsync(f.fileno())
 
     # -- write -----------------------------------------------------------
-    def run(
-        self,
-        extracted: DataFrame,
-        batch_id: str | None = None,
-        mode: str = "single_pass",
-    ) -> dict:
+    def run(self, extracted: DataFrame, batch_id: str | None = None) -> dict:
         """Write ``extracted`` (must have a ``bucket`` column) in
         ``groups`` independent commit units; resume-safe.
 
-        ``single_pass`` (default): ONE extraction pass writes all
-        uncommitted groups via a dynamic-partition write to a staging
-        dir, then each group is atomically renamed + logged.  Row
-        counts come from the staged parquet footers — no second action
-        over the pipeline.  At 100 TB this is the only sane shape: the
-        per-group variant re-runs the scan+extract once per commit
-        unit (the Iceberg equivalent of single_pass is one MERGE per
-        group over a cached/staged intermediate).
-
-        ``per_group``: one spark job per commit unit — finer-grained
-        commit points (a kill mid-run loses at most one group's work)
-        at the cost of re-running the upstream pipeline per group.
-        Use when the upstream is cheap or cached.
-        """
+        ONE extraction pass writes all uncommitted groups via a
+        dynamic-partition write to a staging dir, then each group is
+        atomically renamed + logged.  Row counts come from the staged
+        parquet footers — no second action over the pipeline.  At
+        100 TB this is the only sane shape (the Iceberg equivalent is
+        one MERGE per group over a cached/staged intermediate)."""
         batch_id = batch_id or uuid.uuid4().hex
         done = self.committed_groups()
-        stats = {"groups_total": self.groups, "groups_skipped": len(done)}
-        df = extracted.withColumn(
-            "commit_group",
-            F.pmod(F.col("bucket"), F.lit(self.groups)).cast("int"),
-        )
         todo = [g for g in range(self.groups) if g not in done]
-        if not todo:
-            stats["groups_written"] = 0
-            return stats
-
-        if mode == "per_group":
-            for g in todo:
-                part = df.filter(
-                    F.col("commit_group") == g
-                ).drop("commit_group")
-                staging = os.path.join(
-                    self.out_dir, f"_staging_{g}_{batch_id}"
+        if todo:
+            staging_root, entries = self._stage(extracted, batch_id, todo)
+            for e in entries:
+                _swap_in(
+                    os.path.join(staging_root, f"commit_group={e['group']}"),
+                    os.path.join(self.out_dir, f"group={e['group']}"),
                 )
-                n_rows = part.count()
-                part.write.mode("overwrite").parquet(staging)
-                self._commit_group(g, staging, n_rows, batch_id)
-        else:
-            staging_root = os.path.join(self.out_dir, f"_staging_{batch_id}")
-            keep = df.filter(F.col("commit_group").isin(todo))
-            keep.write.mode("overwrite").partitionBy("commit_group").parquet(
-                staging_root
-            )
-            for g in todo:
-                staged = os.path.join(staging_root, f"commit_group={g}")
-                if not os.path.exists(staged):
-                    os.makedirs(staged)  # empty group still commits
-                self._commit_group(
-                    g, staged, _parquet_row_count(staged), batch_id
-                )
+                self._append_log(e)
             shutil.rmtree(staging_root, ignore_errors=True)
-        stats["groups_written"] = len(todo)
-        return stats
+        return {
+            "groups_total": self.groups,
+            "groups_skipped": len(done),
+            "groups_written": len(todo),
+        }
 
-    def _commit_group(
-        self, g: int, staging: str, n_rows: int, batch_id: str
-    ) -> None:
-        final = os.path.join(self.out_dir, f"group={g}")
-        if os.path.exists(final):
-            shutil.rmtree(final)  # stale partial from a killed run
-        os.replace(staging, final)
-        self._append_log(
-            {
+    def _stage(self, df: DataFrame, batch_id: str, todo: list) -> tuple:
+        """Stage the rows of commit groups ``todo`` in ONE
+        dynamic-partition write (this is where the url-hash sharding
+        becomes physical); returns the staging root and one commit-log
+        entry per group, its row count read from the staged footers.
+        An empty group still gets a (empty) staged dir and an entry."""
+        staging_root = os.path.join(self.out_dir, f"_staging_{batch_id}")
+        grouped = df.withColumn("commit_group", commit_group(self.groups))
+        grouped.filter(F.col("commit_group").isin(todo)).write.mode(
+            "overwrite"
+        ).partitionBy("commit_group").parquet(staging_root)
+        entries = []
+        for g in todo:
+            staged = os.path.join(staging_root, f"commit_group={g}")
+            os.makedirs(staged, exist_ok=True)
+            entries.append({
                 "group": g,
                 "buckets": list(range(g, self.n_shards, self.groups)),
-                "n_rows": n_rows,
+                "n_rows": _parquet_row_count(staged),
                 "batch_id": batch_id,
-            }
-        )
+            })
+        return staging_root, entries
 
     def read(self, spark) -> DataFrame:
         return spark.read.parquet(os.path.join(self.out_dir, "group=*"))
@@ -161,8 +156,7 @@ class CheckpointedWriter:
             [(b,) for b in committed], "bucket int"
         )
         with_bucket = pages.withColumn(
-            "bucket",
-            F.pmod(F.xxhash64(F.col(url_col)), F.lit(self.n_shards)).cast("int"),
+            "bucket", url_bucket(self.n_shards, url_col)
         )
         return with_bucket.join(
             F.broadcast(committed_df), on="bucket", how="left_anti"
@@ -195,10 +189,7 @@ class CheckpointedWriter:
         )
         df.write.mode("overwrite").parquet(staging)
         n_rows = _parquet_row_count(staging)
-        final = os.path.join(self.out_dir, f"delta={delta_id}")
-        if os.path.exists(final):
-            shutil.rmtree(final)  # stale partial from a killed run
-        os.replace(staging, final)
+        _swap_in(staging, os.path.join(self.out_dir, f"delta={delta_id}"))
         self._append_log(
             {"delta_id": delta_id, "delta_seq": seq, "n_rows": n_rows,
              "key_col": key_col}
@@ -291,37 +282,14 @@ class CheckpointedWriter:
         merged = self.read_merged(spark, key_col=key_col)
         if "bucket" not in merged.columns:
             merged = merged.withColumn(
-                "bucket",
-                F.pmod(F.xxhash64(F.col(key_col)),
-                       F.lit(self.n_shards)).cast("int"),
+                "bucket", url_bucket(self.n_shards, key_col)
             )
-        df = merged.withColumn(
-            "commit_group",
-            F.pmod(F.col("bucket"), F.lit(self.groups)).cast("int"),
-        )
         batch_id = "compact_" + uuid.uuid4().hex
-        staging_root = os.path.join(self.out_dir, f"_staging_{batch_id}")
-        df.write.mode("overwrite").partitionBy("commit_group").parquet(
-            staging_root
+        # step 1, and the post-compaction log, before touching live dirs
+        staging_root, new_log = self._stage(
+            merged, batch_id, list(range(self.groups))
         )
-        # build the post-compaction log before touching live dirs
-        new_log = []
-        n_total = 0
-        group_rows = {}
-        for g in range(self.groups):
-            staged = os.path.join(staging_root, f"commit_group={g}")
-            if not os.path.exists(staged):
-                os.makedirs(staged)
-            group_rows[g] = _parquet_row_count(staged)
-            n_total += group_rows[g]
-            new_log.append(
-                {
-                    "group": g,
-                    "buckets": list(range(g, self.n_shards, self.groups)),
-                    "n_rows": group_rows[g],
-                    "batch_id": batch_id,
-                }
-            )
+        n_total = sum(e["n_rows"] for e in new_log)
         new_log.append(
             {
                 "compaction": True,
@@ -339,11 +307,10 @@ class CheckpointedWriter:
             os.fsync(f.fileno())
         # step 2: swap group dirs (view stays equivalent throughout)
         for g in range(self.groups):
-            staged = os.path.join(staging_root, f"commit_group={g}")
-            final = os.path.join(self.out_dir, f"group={g}")
-            if os.path.exists(final):
-                shutil.rmtree(final)
-            os.replace(staged, final)
+            _swap_in(
+                os.path.join(staging_root, f"commit_group={g}"),
+                os.path.join(self.out_dir, f"group={g}"),
+            )
         shutil.rmtree(staging_root, ignore_errors=True)
         # step 3: atomic log switch — deltas retired from the read path
         os.replace(tmp_log, self.log_path)

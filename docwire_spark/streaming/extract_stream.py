@@ -1,7 +1,7 @@
 """Structured Streaming extraction: continuous ingest of page batches.
 
 The batch pipeline's exact transformation (``extract_pages`` —
-byte-bounded splits, mapInPandas kernel, computed url-hash bucket)
+byte-bounded splits, the mapInArrow kernel, computed url-hash bucket)
 applied to a streaming DataFrame: new parquet drops under the source
 path are discovered per micro-batch, extracted, and appended to the
 sink partitioned by commit bucket-group, with the stream checkpoint
@@ -22,35 +22,14 @@ Usage::
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import SparkSession
 
-from docwire_spark.spark.extract import (
-    DEFAULT_SHARDS, _make_extract_batches, _result_schema,
-)
+from docwire_spark.spark.extract import DEFAULT_SHARDS, extract_pages
+from docwire_spark.spark.lineage import commit_group
 
 PAGES_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
-
-
-def extract_stream(
-    pages: DataFrame,
-    n_shards: int = DEFAULT_SHARDS,
-    with_main_content: bool = False,
-    exports: tuple = (),
-) -> DataFrame:
-    """Apply the extraction transformation to a streaming DataFrame.
-
-    Mirrors ``extract_pages`` (no pre-shuffle; bucket is computed on
-    the narrow input and passed through the Arrow batches)."""
-    src = pages.select(
-        "url", "html",
-        F.pmod(F.xxhash64(F.col("url")), F.lit(n_shards))
-        .cast("int").alias("bucket"),
-    )
-    schema = _result_schema(False, with_main_content, exports)
-    batch_fn = _make_extract_batches(False, with_main_content, exports)
-    return src.mapInArrow(batch_fn, schema)
 
 
 def start_extract_stream(
@@ -61,7 +40,6 @@ def start_extract_stream(
     n_shards: int = DEFAULT_SHARDS,
     groups: int = 16,
     trigger_available_now: bool = True,
-    max_files_per_trigger: int | None = None,
 ):
     """File-source -> extraction -> partitioned parquet sink.
 
@@ -69,14 +47,11 @@ def start_extract_stream(
     without it the query runs continuously.  ``commit_group``
     partitioning matches the batch writer's layout so resume tooling
     and readers are shared."""
-    reader = (
-        spark.readStream.schema(PAGES_DDL).format("parquet")
+    pages = spark.readStream.schema(PAGES_DDL).format("parquet").load(
+        source_path
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    pages = reader.load(source_path)
-    extracted = extract_stream(pages, n_shards=n_shards).withColumn(
-        "commit_group", F.pmod(F.col("bucket"), F.lit(groups)).cast("int")
+    extracted = extract_pages(pages, n_shards=n_shards).withColumn(
+        "commit_group", commit_group(groups)
     )
     writer = (
         extracted.writeStream.format("parquet")

@@ -59,7 +59,7 @@ def main():
         },
     )
     # AQE only inserts materialization barriers here — the extraction
-    # pipeline is scan -> repartition -> mapInArrow -> agg with no
+    # pipeline is scan -> mapInArrow -> commit write with no
     # joins or skewed aggregations to re-plan (measured: 69s -> 42s on
     # a 600k-doc run at local[16] with it off)
     spark.conf.set("spark.sql.adaptive.enabled", "false")

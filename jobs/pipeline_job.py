@@ -51,7 +51,7 @@ def run_pipeline(spark, pages, out_dir: str, n_shards: int = 64,
     from docwire_spark.ops.corpus_filter import corpus_quality_filter
     from docwire_spark.ops.dedup import dedup_components, dedup_exact
     from docwire_spark.spark.extract import extract_pages
-    from docwire_spark.spark.lineage import CheckpointedWriter
+    from docwire_spark.spark.lineage import CheckpointedWriter, url_bucket
 
     summary: dict = {"phases": {}}
 
@@ -164,8 +164,7 @@ def run_pipeline(spark, pages, out_dir: str, n_shards: int = 64,
         ).select("doc_id")
         docs = spark.read.parquet(os.path.join(st3, "documents.parquet"))
         kept = docs.join(keep, "doc_id", "left_semi").withColumn(
-            "bucket",
-            F.pmod(F.xxhash64("url"), F.lit(n_shards)).cast("int"),
+            "bucket", url_bucket(n_shards)
         )
         w = CheckpointedWriter(final, n_shards=n_shards, groups=groups)
         stats = w.run(kept)

@@ -121,8 +121,8 @@ def test_all_corpus_ops_match_oracles_on_hostile_rows(spark, hostile_dir):
             "bpe_encode", "lm_perplexity", "inverted_index",
             "url_canonicalize", "bloom_url_blocklist",
             "multimodal_meta", "multimodal_frames",
-            "extract_stream_plain", "stream_dedup_stateful",
-            "stream_dedup_native", "stream_corpus_clean"} <= set(ran)
+            "extract_stream_plain", "stream_dedup_native",
+            "stream_corpus_clean"} <= set(ran)
 
 
 @pytest.fixture(scope="module")

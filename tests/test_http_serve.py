@@ -118,6 +118,36 @@ def test_body_limit_413(server):
     assert exc_info.value.code == 413
 
 
+def _post_oversized_then_read(server) -> bytes:
+    """Raw-socket POST of an oversized body, sent in full before
+    anything is read; returns the whole response.  12 MiB is more than
+    loopback socket buffers absorb, so the send is still running when
+    the server answers."""
+    import socket
+
+    host, port = server.url.split("//")[1].split(":")
+    body = b"x" * (12 << 20)
+    with socket.create_connection((host, int(port)), timeout=10) as sock:
+        sock.sendall(
+            b"POST /extract HTTP/1.1\r\nHost: %s\r\n"
+            b"Content-Length: %d\r\n\r\n" % (host.encode(), len(body))
+        )
+        sock.sendall(body)
+        resp = b""
+        while chunk := sock.recv(1 << 16):
+            resp += chunk
+    return resp
+
+
+def test_body_limit_413_read_after_full_send(server):
+    """A client that sends the whole oversized body before reading
+    still gets the 413, every time: the server drains the body before
+    closing, so the close does not reset the connection."""
+    for attempt in range(25):
+        resp = _post_oversized_then_read(server)
+        assert resp.startswith(b"HTTP/1.1 413"), (attempt, resp[:80])
+
+
 def _raw_post(server, length_header):
     """POST a small body with the given Content-Length header value
     (None: no header at all); returns (status, body)."""

@@ -121,8 +121,9 @@ def test_broadcast_hints_are_size_gated(spark, monkeypatch):
 
 
 def test_extraction_has_no_shuffle(spark):
-    """The no-pre-shuffle design: extract_pages without the opt-in
-    repartition must contain NO Exchange — raw html bytes never move."""
+    """The no-pre-shuffle design: extract_pages must contain NO
+    Exchange — raw html bytes never move — and cross the Python
+    boundary exactly once, as one Arrow batch map."""
     from pyspark.sql import functions as F
 
     from docwire_spark.ops.common import load
@@ -136,6 +137,8 @@ def test_extraction_has_no_shuffle(spark):
     )
     plan = _plan(extract_pages(pages, n_shards=4))
     assert "Exchange" not in plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "MapInPandas" not in plan
 
 
 def test_text_stats_stay_jvm_side(spark):

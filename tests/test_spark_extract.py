@@ -1,4 +1,4 @@
-"""End-to-end Spark extraction tests: synthetic corpus -> mapInPandas
+"""End-to-end Spark extraction tests: synthetic corpus -> mapInArrow
 extraction -> byte-identity vs the analytically-generated expected
 text; plus lineage/resume and skew-salting behavior."""
 
@@ -58,19 +58,18 @@ def test_metrics(spark, pages):
     assert all(r.bytes_in > 0 for r in m)
 
 
-@pytest.mark.parametrize("mode", ["single_pass", "per_group"])
-def test_checkpointed_writer_resume(spark, pages, tmp_path, mode):
-    out = str(tmp_path / f"out_{mode}")
+def test_checkpointed_writer_resume(spark, pages, tmp_path):
+    out = str(tmp_path / "out")
     extracted = extract_pages(pages, n_shards=8)
     w = CheckpointedWriter(out, n_shards=8, groups=4)
-    stats = w.run(extracted, batch_id="batch1", mode=mode)
+    stats = w.run(extracted, batch_id="batch1")
     assert stats["groups_written"] == 4
 
     # simulate a killed job: drop one committed group from the log
     lines = open(w.log_path).read().strip().splitlines()
     with open(w.log_path, "w") as f:
         f.write("\n".join(lines[:-1]) + "\n")
-    stats2 = w.run(extracted, batch_id="batch2", mode=mode)
+    stats2 = w.run(extracted, batch_id="batch2")
     assert stats2["groups_skipped"] == 3
     assert stats2["groups_written"] == 1
 
@@ -83,7 +82,7 @@ def test_checkpointed_writer_resume(spark, pages, tmp_path, mode):
     )
     assert logged == N_DOCS
     # idempotent: nothing left to write
-    stats3 = w.run(extracted, batch_id="batch3", mode=mode)
+    stats3 = w.run(extracted, batch_id="batch3")
     assert stats3["groups_written"] == 0
 
     # resume filter drops all committed input rows
